@@ -15,11 +15,13 @@ import argparse
 import datetime as _dt
 import sys
 import time
-from typing import List, Optional, Sequence
+from typing import List, Optional, Sequence, Tuple
 
 from pramen_spark.config.loader import build_jobs, load_workflow
 from pramen_spark.metastore.metastore import Metastore
 from pramen_spark.notify import NotificationConfig, PipelineNotificationBuilder
+from pramen_spark.offsets.cached import CachedOffsetLedger
+from pramen_spark.offsets.ledger import OffsetLedger
 from pramen_spark.runner.bookkeeper import Bookkeeper, Journal, JsonBookkeeper
 from pramen_spark.runner.runner import PipelineRunner
 from pramen_spark.scheduling.strategies import RunMode, ScheduleParams
@@ -72,19 +74,14 @@ def schedule_params(args: argparse.Namespace) -> ScheduleParams:
     )
 
 
-def main(argv: Optional[Sequence[str]] = None) -> int:
-    args = parse_args(argv)
-    wf = load_workflow(args.workflow)
-
-    from pramen_spark.session import build_session
-
-    spark = build_session(app_name=wf.pipeline_name, extra_conf=wf.spark_conf)
-    # pramen.bookkeeping.location + pramen.bookkeeping.hadoop.format select
-    # the backend (reference: BookkeeperDeltaPath / BookkeeperText)
-    # the journal and offset-ledger backends follow the bookkeeping backend,
-    # as in the reference (JournalJdbc/OffsetManagerJdbc share the JDBC
-    # config; JournalHadoopDeltaPath shares pramen.bookkeeping.location)
-    ledger = None
+def open_stores(spark, wf) -> Tuple[Bookkeeper, Journal, Optional[CachedOffsetLedger]]:
+    """The bookkeeper, run journal and offset ledger the workflow's
+    bookkeeping settings name (reference: BookkeeperJdbc /
+    BookkeeperDeltaPath / BookkeeperText). The journal and ledger follow
+    the bookkeeping backend, as in the reference: JournalJdbc and
+    OffsetManagerJdbc share the JDBC config, JournalHadoopDeltaPath shares
+    ``pramen.bookkeeping.location``. Without a location nothing persists
+    and there is no ledger."""
     if wf.bookkeeping_jdbc_sqlite or wf.bookkeeping_jdbc_factory:
         from pramen_spark.runner.dbapi_bookkeeper import (
             DbApiBookkeeper,
@@ -99,33 +96,39 @@ def main(argv: Optional[Sequence[str]] = None) -> int:
 
             factory = load_class(wf.bookkeeping_jdbc_factory)
         db = DbApiConnection(wf.bookkeeping_jdbc_sqlite, factory)
-        bookkeeper: Bookkeeper = DbApiBookkeeper(db)
-        journal = DbApiJournal(db)
-        ledger = DbApiOffsetLedger(db)
+        bookkeeper, journal, ledger = DbApiBookkeeper(db), DbApiJournal(db), DbApiOffsetLedger(db)
     elif wf.bookkeeping_path and wf.bookkeeping_format in ("parquet", "delta"):
         from pramen_spark.offsets.spark_ledger import SparkOffsetLedger
         from pramen_spark.runner.spark_bookkeeper import SparkBookkeeper, SparkJournal
 
         base = wf.bookkeeping_path.rstrip("/")
-        bookkeeper = SparkBookkeeper(spark, wf.bookkeeping_path, wf.bookkeeping_format)
-        journal = SparkJournal(spark, f"{base}/journal", wf.bookkeeping_format)
-        ledger = SparkOffsetLedger(spark, f"{base}/offsets", wf.bookkeeping_format)
+        bookkeeper, journal, ledger = (
+            SparkBookkeeper(spark, base, wf.bookkeeping_format),
+            SparkJournal(spark, f"{base}/journal", wf.bookkeeping_format),
+            SparkOffsetLedger(spark, f"{base}/offsets", wf.bookkeeping_format),
+        )
     elif wf.bookkeeping_path:
-        from pramen_spark.offsets.ledger import OffsetLedger
-
-        bookkeeper = JsonBookkeeper(wf.bookkeeping_path)
-        journal = Journal(path=wf.bookkeeping_path + ".journal.jsonl")
-        ledger = OffsetLedger(wf.bookkeeping_path + ".offsets.jsonl")
+        bookkeeper, journal, ledger = (
+            JsonBookkeeper(wf.bookkeeping_path),
+            Journal(path=wf.bookkeeping_path + ".journal.jsonl"),
+            OffsetLedger(wf.bookkeeping_path + ".offsets.jsonl"),
+        )
     else:
-        bookkeeper = Bookkeeper()
-        journal = Journal()
-    if ledger is not None:
-        # per-run read-through cache of the min/max offset query (reference
-        # core/.../bookkeeper/OffsetManagerCached.scala) — one storage read
-        # per (table, info_date) per run for the Spark/DBAPI backends
-        from pramen_spark.offsets.cached import CachedOffsetLedger
+        return Bookkeeper(), Journal(), None
+    # per-run read-through cache of the min/max offset query (reference
+    # core/.../bookkeeper/OffsetManagerCached.scala) — one storage read
+    # per (table, info_date) per run for the Spark/DBAPI backends
+    return bookkeeper, journal, CachedOffsetLedger(ledger)
 
-        ledger = CachedOffsetLedger(ledger)
+
+def main(argv: Optional[Sequence[str]] = None) -> int:
+    args = parse_args(argv)
+    wf = load_workflow(args.workflow)
+
+    from pramen_spark.session import build_session
+
+    spark = build_session(app_name=wf.pipeline_name, extra_conf=wf.spark_conf)
+    bookkeeper, journal, ledger = open_stores(spark, wf)
     metastore = Metastore(spark, wf.tables, temp_dir=wf.temp_dir)
     jobs = build_jobs(spark, wf, metastore, bookkeeper, ledger=ledger)
     if args.ops:

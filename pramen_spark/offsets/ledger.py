@@ -14,21 +14,22 @@ Protocol (reference core/.../bookkeeper/OffsetManager.scala:36-91):
 
 Offset types and their normalized string encodings follow
 api/.../offset/OffsetType.scala:23-59 (datetime = epoch millis).
-The backend is a JSON-lines file; the interface maps 1:1 onto a Delta
-table for cluster deployments.
+One :class:`OffsetLedger` serves the memory, JSON-lines and Spark backends,
+which differ only in the :mod:`pramen_spark.store` record store that holds
+the event log; the DBAPI ledger keeps one row per transaction instead
+(``runner/dbapi_bookkeeper.py``).
 """
 
 from __future__ import annotations
 
 import datetime as _dt
-import json
-import os
 import threading
 import time
-from dataclasses import asdict, dataclass
-from typing import Dict, List, Optional, Tuple
+from dataclasses import asdict, dataclass, replace
+from typing import List, Optional, Tuple
 
 from pramen_spark.sql.generators import OffsetType, OffsetValue
+from pramen_spark.store import JsonLinesStore, MemoryStore, RecordStore
 
 
 def encode_offset(v: OffsetValue) -> str:
@@ -72,31 +73,68 @@ class OffsetTransaction:
     batch_id: int
 
 
+@dataclass(kw_only=True)
+class OffsetEvent:
+    """One start, commit or rollback of an offset transaction with the
+    record's state after it: the row layout of the event-log ledgers.
+    ``seq`` orders the events (nanoseconds, strictly increasing per ledger)."""
+
+    op: str
+    table_name: str
+    info_date: str
+    offset_type: Optional[str] = None
+    batch_id: int
+    created_at: Optional[float] = None
+    committed_at: Optional[float] = None
+    min_offset: Optional[str] = None
+    max_offset: Optional[str] = None
+    seq: int = 0
+
+
+def _key(r) -> Tuple[str, str, int]:
+    return (r.table_name, r.info_date, r.batch_id)
+
+
 class OffsetLedger:
-    def __init__(self, path: Optional[str] = None):
-        self.path = path
+    """Offset transactions folded from an event log kept in ``store`` (a
+    JSON-lines file at ``path``, else memory). Query methods re-read the
+    store first, so a driver sees transactions other drivers committed
+    after this ledger was opened."""
+
+    def __init__(self, path: Optional[str] = None, store: Optional[RecordStore] = None):
+        if store is None:
+            store = JsonLinesStore(path, OffsetEvent) if path else MemoryStore(OffsetEvent)
+        self._store = store
         self._records: List[OffsetRecord] = []
         self._lock = threading.Lock()
-        if path:
-            os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-            if os.path.exists(path):
-                self._replay()
+        self._seq = 0
+        self.refresh()
 
-    def _replay(self) -> None:
-        events: List[dict] = []
-        with open(self.path) as f:
-            for line in f:
-                line = line.strip()
-                if line:
-                    events.append(json.loads(line))
-        self._records = _fold_events(events)
+    def _log(self, op: str, rec: OffsetRecord) -> None:
+        """Append ``rec``'s new state as an ``op`` event; caller holds the lock."""
+        self._seq = max(time.time_ns(), self._seq + 1)  # even if the clock steps back
+        self._store.append(OffsetEvent(op=op, seq=self._seq, **asdict(rec)))
 
-    def _append(self, op: str, rec: dict) -> None:
-        if self.path:
-            rec = dict(rec)
-            rec["op"] = op
-            with open(self.path, "a") as f:
-                f.write(json.dumps(rec) + "\n")
+    def refresh(self) -> None:
+        """Re-read the event log (picks up other drivers' transactions).
+
+        Ours win: a commit this ledger has seen beats a stored copy of the
+        same transaction that is still open, and an open transaction the
+        store does not show yet is kept. Both cover writes that land while
+        the store is being read, and stores whose reads may lag."""
+        stored = _fold_events(sorted(self._store.read(), key=lambda e: e.seq))
+        with self._lock:
+            ours = {_key(r) + (r.created_at,): r for r in self._records}
+            merged = []
+            for rec in stored:
+                mine = ours.pop(_key(rec) + (rec.created_at,), None)
+                merged.append(mine if mine is not None and mine.is_committed else rec)
+            self._records = merged + [r for r in ours.values() if not r.is_committed]
+
+    def compact(self) -> int:
+        """Fold the store's small files; returns the number of events kept.
+        Safe only when no other driver is mid-write."""
+        return self._store.compact()
 
     # --- protocol ---
 
@@ -111,80 +149,59 @@ class OffsetLedger:
             created_at=time.time(),
         )
         with self._lock:
+            self._log("start", rec)
             # a re-start of a never-finished tx supersedes the stale open
             # record: two open records for one key would double-repair
             self._records = [
-                r
-                for r in self._records
-                if not (
-                    r.table_name == table
-                    and r.info_date == rec.info_date
-                    and r.batch_id == batch_id
-                    and not r.is_committed
-                )
+                r for r in self._records if not (_key(r) == _key(rec) and not r.is_committed)
             ]
             self._records.append(rec)
-            self._append("start", asdict(rec))
-        return OffsetTransaction(table, info_date.isoformat(), batch_id)
+        return OffsetTransaction(table, rec.info_date, batch_id)
 
-    def _find(self, tx: OffsetTransaction) -> OffsetRecord:
-        """The OPEN (uncommitted) record of this transaction key. A committed
-        record is final — commit/rollback must never touch it, even when a
-        later transaction reuses the same (table, date, batch) key."""
-        found = None
-        for rec in self._records:
-            if (
-                rec.table_name == tx.table_name
-                and rec.info_date == tx.info_date
-                and rec.batch_id == tx.batch_id
-                and not rec.is_committed
-            ):
-                found = rec  # newest open record with the key wins
-        if found is None:
-            raise KeyError(f"No open offset transaction for {tx}")
-        return found
+    def _find(self, tx: OffsetTransaction) -> int:
+        """Index of the newest OPEN (uncommitted) record of this transaction
+        key. A committed record is final — commit/rollback must never touch
+        it, even when a later transaction reuses the same (table, date,
+        batch) key."""
+        for i in reversed(range(len(self._records))):
+            rec = self._records[i]
+            if _key(rec) == _key(tx) and not rec.is_committed:
+                return i
+        raise KeyError(f"No open offset transaction for {tx}")
 
     def commit(self, tx: OffsetTransaction, min_offset: OffsetValue, max_offset: OffsetValue) -> None:
         with self._lock:
-            rec = self._find(tx)
-            rec.committed_at = time.time()
-            rec.min_offset = encode_offset(min_offset)
-            rec.max_offset = encode_offset(max_offset)
-            self._append(
-                "commit",
-                {
-                    "table_name": rec.table_name,
-                    "info_date": rec.info_date,
-                    "batch_id": rec.batch_id,
-                    "committed_at": rec.committed_at,
-                    "min_offset": rec.min_offset,
-                    "max_offset": rec.max_offset,
-                },
+            i = self._find(tx)
+            done = replace(
+                self._records[i],
+                committed_at=time.time(),
+                min_offset=encode_offset(min_offset),
+                max_offset=encode_offset(max_offset),
             )
+            self._log("commit", done)
+            self._records[i] = done
 
     def rollback(self, tx: OffsetTransaction) -> None:
         with self._lock:
-            rec = self._find(tx)
-            self._records.remove(rec)
-            self._append(
-                "rollback",
-                {"table_name": rec.table_name, "info_date": rec.info_date, "batch_id": rec.batch_id},
-            )
+            i = self._find(tx)
+            self._log("rollback", self._records[i])
+            del self._records[i]
 
-    # --- queries ---
+    # --- queries (refresh-first so concurrent drivers are visible) ---
 
     def get_offsets(self, table: str, info_date: Optional[_dt.date] = None) -> List[OffsetRecord]:
-        return [
-            r
-            for r in self._records
-            if r.table_name == table
-            and (info_date is None or r.info_date == info_date.isoformat())
-        ]
+        self.refresh()
+        day = info_date.isoformat() if info_date is not None else None
+        with self._lock:
+            return [
+                r for r in self._records
+                if r.table_name == table and (day is None or r.info_date == day)
+            ]
 
     def get_uncommitted(self, table: str) -> List[OffsetRecord]:
         """Orphan transactions from crashed runs; callers must delete the
         matching batch rows from storage before rolling these back."""
-        return [r for r in self._records if r.table_name == table and not r.is_committed]
+        return [r for r in self.get_offsets(table) if not r.is_committed]
 
     def get_max_info_date_and_offset(
         self, table: str, only_for_info_date: Optional[_dt.date] = None
@@ -214,46 +231,30 @@ def _offset_sort_key(v: OffsetValue):
     return v.value
 
 
-def _fold_events(events: List[dict]) -> List[OffsetRecord]:
+def _fold_events(events: List[OffsetEvent]) -> List[OffsetRecord]:
     """Fold an ordered stream of start/commit/rollback events into the
-    current set of offset records (shared by the JSONL and Spark backends).
+    current set of offset records.
 
     Commit and rollback apply to the newest OPEN record of their key; a
     committed record is final and survives later events that reuse the
-    same (table, date, batch) key — mirroring the in-memory ``_find``."""
+    same (table, date, batch) key — mirroring ``OffsetLedger._find``."""
     records: List[OffsetRecord] = []
-
-    def newest_open(key: Tuple[str, str, int]) -> Optional[OffsetRecord]:
-        found = None
-        for r in records:
-            if (r.table_name, r.info_date, r.batch_id) == key and not r.is_committed:
-                found = r
-        return found
-
-    for rec in events:
-        op = rec.get("op")
-        key = (rec["table_name"], rec["info_date"], rec["batch_id"])
-        if op == "start":
-            stale = newest_open(key)
-            if stale is not None:  # re-start of a never-finished tx
-                records.remove(stale)
-            records.append(
-                OffsetRecord(
-                    table_name=rec["table_name"],
-                    info_date=rec["info_date"],
-                    offset_type=rec["offset_type"],
-                    batch_id=rec["batch_id"],
-                    created_at=rec["created_at"],
-                )
-            )
-        elif op == "commit":
-            target = newest_open(key)
-            if target is not None:
-                target.committed_at = rec["committed_at"]
-                target.min_offset = rec["min_offset"]
-                target.max_offset = rec["max_offset"]
-        elif op == "rollback":
-            target = newest_open(key)
-            if target is not None:
+    for e in events:
+        target = next(
+            (r for r in reversed(records) if _key(r) == _key(e) and not r.is_committed), None
+        )
+        if e.op == "start":
+            if target is not None:  # re-start of a never-finished tx
                 records.remove(target)
+            records.append(
+                OffsetRecord(e.table_name, e.info_date, e.offset_type, e.batch_id, e.created_at)
+            )
+        elif target is None:
+            continue
+        elif e.op == "commit":
+            target.committed_at = e.committed_at
+            target.min_offset = e.min_offset
+            target.max_offset = e.max_offset
+        elif e.op == "rollback":
+            records.remove(target)
     return records

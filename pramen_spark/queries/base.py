@@ -34,21 +34,45 @@ from pramen_spark.operators.tsutils import pin_utc, ts_instant
 import datetime as _dt
 import os as _os
 
-#: (path, mtime_ns, size) -> StructType. Production engines resolve table
-#: schemas from a catalog/metastore instead of re-sniffing parquet footers
-#: on every query; this cache is that behavior for the path-addressed
-#: testdata tables. Metadata only — the DATA is always scanned from
-#: parquet at execution time — and the stat key invalidates the entry the
-#: moment a file is rewritten, so a changed table re-infers. Measured
-#: cost of footer inference: ~75 ms per spark.read.parquet call vs ~16 ms
-#: with an explicit schema (floor probe, r15); at ~570 load calls per
-#: bench pass the inference was ~10% of the whole suite.
+#: (path stat, newest data file, inference conf) -> StructType. Production
+#: engines resolve table schemas from a catalog/metastore instead of
+#: re-sniffing parquet footers on every query; this cache is that behavior
+#: for the path-addressed testdata tables. Metadata only — the DATA is always
+#: scanned from parquet at execution time. A directory's own stat does not
+#: change when a part file is rewritten in place, so the key also holds the
+#: newest data file's name, mtime and size, and the conf that changes what
+#: inference returns. Measured cost of footer inference: ~75 ms per
+#: spark.read.parquet call vs ~16 ms with an explicit schema (floor probe,
+#: r15); at ~570 load calls per bench pass the inference was ~10% of the
+#: whole suite.
 _SCHEMA_CACHE: dict = {}
+
+
+def _newest_data_file(path: str):
+    """(mtime_ns, name, size) of the newest data file under ``path``; files
+    and directories named ``_*`` or ``.*`` are Spark/Hadoop metadata."""
+    newest = None
+    for root, dirs, files in _os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for name in files:
+            if not name.startswith(("_", ".")):
+                full = _os.path.join(root, name)
+                st = _os.stat(full)
+                found = (st.st_mtime_ns, full, st.st_size)
+                if newest is None or found > newest:
+                    newest = found
+    return newest
 
 
 def _parquet_schema(spark: SparkSession, path: str):
     st = _os.stat(path)
-    key = (path, st.st_mtime_ns, st.st_size)
+    key = (
+        path,
+        st.st_mtime_ns,
+        st.st_size,
+        _newest_data_file(path),
+        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None),
+    )
     sch = _SCHEMA_CACHE.get(key)
     if sch is None:
         sch = spark.read.parquet(path).schema

@@ -9,10 +9,12 @@ Reference surface (core/.../bookkeeper/Bookkeeper.scala and backends):
 - ``setRecordCount`` on successful save
 - schema get/save with drift history
 
-The default backend here is a JSON-lines file (append-only journal +
-compacted state), suitable for a single driver; the interface is small so
-a Delta-backed ledger can replace it on a cluster (the reference similarly
-ships JDBC/Delta/Hadoop-path backends).
+One :class:`Bookkeeper` and one :class:`Journal` serve every backend; a
+backend is the pair of :mod:`pramen_spark.store` record stores they are
+given (memory by default, JSON-lines files for :class:`JsonBookkeeper`,
+Spark datasets and DBAPI tables in ``spark_bookkeeper`` /
+``dbapi_bookkeeper`` — the reference similarly ships text, Delta/Hadoop-path
+and JDBC backends).
 """
 
 from __future__ import annotations
@@ -22,8 +24,10 @@ import json
 import os
 import threading
 import time
-from dataclasses import asdict, dataclass, field
-from typing import Dict, List, Optional, Tuple
+from dataclasses import dataclass
+from typing import Dict, List, Optional
+
+from pramen_spark.store import JsonLinesStore, MemoryStore, RecordStore
 
 
 @dataclass
@@ -41,13 +45,45 @@ class DataChunk:
         return _dt.date.fromisoformat(self.info_date)
 
 
-class Bookkeeper:
-    """In-memory bookkeeper; base class for persistent backends."""
+@dataclass
+class SchemaVersion:
+    table_name: str
+    info_date: str  # ISO yyyy-MM-dd
+    schema_json: str
+    updated_at: float
 
-    def __init__(self) -> None:
+
+class Bookkeeper:
+    """Chunk and schema history over two record stores (in memory unless
+    given). State is read from the stores at open; ``refresh()`` re-reads
+    it to pick up other drivers' records."""
+
+    def __init__(
+        self,
+        chunks: Optional[RecordStore[DataChunk]] = None,
+        schemas: Optional[RecordStore[SchemaVersion]] = None,
+    ) -> None:
+        self._chunk_store = chunks or MemoryStore(DataChunk)
+        self._schema_store = schemas or MemoryStore(SchemaVersion)
         self._chunks: List[DataChunk] = []
-        self._schemas: Dict[str, List[Tuple[str, str]]] = {}  # table -> [(date, schema_json)]
+        self._schemas: Dict[str, List[SchemaVersion]] = {}  # sorted by info_date
         self._lock = threading.Lock()
+        self.refresh()
+
+    def refresh(self) -> None:
+        """Re-read storage (picks up records written by other drivers)."""
+        chunks = sorted(self._chunk_store.read(), key=lambda c: (c.info_date, c.job_finished))
+        schemas: Dict[str, List[SchemaVersion]] = {}
+        for v in sorted(self._schema_store.read(), key=lambda v: (v.info_date, v.updated_at)):
+            schemas.setdefault(v.table_name, []).append(v)
+        with self._lock:
+            self._chunks = chunks
+            self._schemas = schemas
+
+    def compact(self) -> int:
+        """Fold both stores' small files; returns the total records kept.
+        Safe only when no other driver is mid-write."""
+        return self._chunk_store.compact() + self._schema_store.compact()
 
     # --- chunks ---
 
@@ -115,72 +151,35 @@ class Bookkeeper:
             batch_id=batch_id,
         )
         with self._lock:
+            self._chunk_store.append(chunk)
             self._chunks.append(chunk)
-            self._persist_chunk(chunk)
         return chunk
 
     # --- schemas ---
 
     def get_latest_schema(self, table: str, until: Optional[_dt.date] = None) -> Optional[dict]:
-        entries = self._schemas.get(table, [])
+        versions = self._schemas.get(table, [])
         if until is not None:
-            entries = [e for e in entries if _dt.date.fromisoformat(e[0]) <= until]
-        if not entries:
+            versions = [v for v in versions if _dt.date.fromisoformat(v.info_date) <= until]
+        if not versions:
             return None
-        return json.loads(entries[-1][1])
+        return json.loads(versions[-1].schema_json)
 
     def save_schema(self, table: str, info_date: _dt.date, schema_json: str) -> None:
+        version = SchemaVersion(table, info_date.isoformat(), schema_json, time.time())
         with self._lock:
-            self._schemas.setdefault(table, []).append((info_date.isoformat(), schema_json))
-            self._schemas[table].sort(key=lambda e: e[0])
-            self._persist_schema(table, info_date, schema_json)
-
-    # --- persistence hooks ---
-
-    def _persist_chunk(self, chunk: DataChunk) -> None:
-        pass
-
-    def _persist_schema(self, table: str, info_date: _dt.date, schema_json: str) -> None:
-        pass
+            self._schema_store.append(version)
+            self._schemas.setdefault(table, []).append(version)
+            self._schemas[table].sort(key=lambda v: v.info_date)
 
 
 class JsonBookkeeper(Bookkeeper):
-    """Append-only JSON-lines file backend; replays on open."""
+    """JSON-lines backend: chunks in ``path``, schema versions in
+    ``{path}.schemas.jsonl``."""
 
     def __init__(self, path: str):
-        super().__init__()
-        self.path = path
-        os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-        if os.path.exists(path):
-            self._replay()
-
-    def _replay(self) -> None:
-        with open(self.path) as f:
-            for line in f:
-                line = line.strip()
-                if not line:
-                    continue
-                rec = json.loads(line)
-                kind = rec.pop("kind", "chunk")
-                if kind == "chunk":
-                    self._chunks.append(DataChunk(**rec))
-                elif kind == "schema":
-                    self._schemas.setdefault(rec["table"], []).append(
-                        (rec["info_date"], rec["schema"])
-                    )
-
-    def _append(self, rec: dict) -> None:
-        with open(self.path, "a") as f:
-            f.write(json.dumps(rec) + "\n")
-
-    def _persist_chunk(self, chunk: DataChunk) -> None:
-        rec = asdict(chunk)
-        rec["kind"] = "chunk"
-        self._append(rec)
-
-    def _persist_schema(self, table: str, info_date: _dt.date, schema_json: str) -> None:
-        self._append(
-            {"kind": "schema", "table": table, "info_date": info_date.isoformat(), "schema": schema_json}
+        super().__init__(
+            JsonLinesStore(path, DataChunk), JsonLinesStore(f"{path}.schemas.jsonl", SchemaVersion)
         )
 
 
@@ -197,27 +196,28 @@ class JournalEntry:
 
 
 class Journal:
-    """Run journal (core/.../journal/*): one entry per task attempt."""
+    """Run journal (core/.../journal/*): one entry per task attempt, kept in
+    ``store`` (a JSON-lines file at ``path``, else memory).
 
-    def __init__(self, path: Optional[str] = None):
-        self.path = path
+    ``entries`` is this driver's view for its run report and starts empty:
+    the journal never replays at open. ``get_entries`` reads the store, so
+    it also sees other drivers' entries."""
+
+    def __init__(self, path: Optional[str] = None, store: Optional[RecordStore[JournalEntry]] = None):
+        if store is None:
+            store = JsonLinesStore(path, JournalEntry) if path else MemoryStore(JournalEntry)
+        self._store = store
         self.entries: List[JournalEntry] = []
-        self._lock = threading.Lock()
-        if path:
-            os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
 
     def add(self, entry: JournalEntry) -> None:
-        with self._lock:
-            self.entries.append(entry)
-            if self.path:
-                with open(self.path, "a") as f:
-                    f.write(json.dumps(asdict(entry)) + "\n")
+        self._store.append(entry)
+        self.entries.append(entry)
 
     def get_entries(self, from_ts: float, to_ts: float) -> List[JournalEntry]:
-        """Entries whose finish time falls in [from_ts, to_ts]
-        (reference: Journal.getEntries(from, to))."""
-        with self._lock:
-            return [e for e in self.entries if from_ts <= e.finished <= to_ts]
+        """Entries whose finish time falls in [from_ts, to_ts], by finish
+        time (reference: Journal.getEntries(from, to))."""
+        found = [e for e in self._store.read() if from_ts <= e.finished <= to_ts]
+        return sorted(found, key=lambda e: e.finished)
 
 
 class TokenLock:

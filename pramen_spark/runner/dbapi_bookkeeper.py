@@ -2,12 +2,9 @@
 
 Reference: core/.../bookkeeper/BookkeeperJdbc.scala, journal/JournalJdbc.scala,
 bookkeeper/OffsetManagerJdbc.scala — the relational backends every shared
-production deployment uses.  Python-side the connection is any DBAPI 2.0
-driver: stdlib ``sqlite3`` works out of the box (``sqlite.path``), anything
-else via ``connection.factory`` (a callable returning an open connection);
-the SQL below sticks to the portable core (CREATE TABLE IF NOT EXISTS,
-positional ``?`` parameters — pass a paramstyle adapter in the factory for
-drivers that use ``%s``).
+production deployment uses. Tables (``bk_records``, ``bk_schemas``,
+``journal``, ``offsets``) take their columns from the record dataclasses
+and are created on open (:class:`pramen_spark.store.DbApiStore`).
 
 Concurrency: one connection guarded by a process lock (DBAPI threadsafety
 varies; the TaskRunner writes from worker threads), transactions delegated
@@ -19,211 +16,59 @@ drivers sharing a database cannot double-commit a batch.
 from __future__ import annotations
 
 import datetime as _dt
-import threading
 import time
-from typing import Any, Callable, List, Optional
 
-from pramen_spark.offsets.ledger import OffsetLedger, OffsetRecord, OffsetTransaction
-from pramen_spark.runner.bookkeeper import Bookkeeper, DataChunk, Journal, JournalEntry
+from pramen_spark.offsets.ledger import OffsetLedger, OffsetRecord, OffsetTransaction, encode_offset
+from pramen_spark.runner.bookkeeper import Bookkeeper, DataChunk, Journal, JournalEntry, SchemaVersion
 from pramen_spark.sql.generators import OffsetType, OffsetValue
+from pramen_spark.store import DbApiConnection, DbApiStore
 
-_DDL = {
-    "bk_records": (
-        "CREATE TABLE IF NOT EXISTS bk_records ("
-        "table_name TEXT, info_date TEXT, input_record_count INTEGER, "
-        "output_record_count INTEGER, job_started REAL, job_finished REAL, "
-        "batch_id INTEGER)"
-    ),
-    "bk_schemas": (
-        "CREATE TABLE IF NOT EXISTS bk_schemas ("
-        "table_name TEXT, info_date TEXT, schema_json TEXT, updated_at REAL)"
-    ),
-    "journal": (
-        "CREATE TABLE IF NOT EXISTS journal ("
-        "table_name TEXT, info_date TEXT, status TEXT, started REAL, "
-        "finished REAL, records INTEGER, reason TEXT, error TEXT)"
-    ),
-    "offsets": (
-        "CREATE TABLE IF NOT EXISTS offsets ("
-        "table_name TEXT, info_date TEXT, offset_type TEXT, batch_id INTEGER, "
-        "created_at REAL, committed_at REAL, min_offset TEXT, max_offset TEXT)"
-    ),
-}
-
-
-class DbApiConnection:
-    """One shared DBAPI connection + lock; creates the schema on open."""
-
-    def __init__(
-        self,
-        sqlite_path: Optional[str] = None,
-        connection_factory: Optional[Callable[[], Any]] = None,
-    ):
-        if connection_factory is not None:
-            self.conn = connection_factory()
-        elif sqlite_path:
-            import sqlite3
-
-            # worker threads write task results; serialize with self.lock
-            self.conn = sqlite3.connect(sqlite_path, check_same_thread=False)
-        else:
-            raise ValueError("DbApiConnection needs sqlite_path or connection_factory")
-        self.lock = threading.Lock()
-        with self.lock:
-            cur = self.conn.cursor()
-            for ddl in _DDL.values():
-                cur.execute(ddl)
-            self.conn.commit()
-            cur.close()
-
-    def execute(self, sql: str, params: tuple = ()) -> List[tuple]:
-        rows, _ = self.execute_with_rowcount(sql, params)
-        return rows
-
-    def execute_with_rowcount(self, sql: str, params: tuple = ()) -> tuple:
-        """(rows, rowcount) — the rowcount is captured inside the lock and
-        returned, never stashed on the shared connection, so concurrent
-        statements cannot read each other's counts."""
-        with self.lock:
-            cur = self.conn.cursor()
-            cur.execute(sql, params)
-            rows = cur.fetchall() if cur.description else []
-            rowcount = cur.rowcount
-            self.conn.commit()
-            cur.close()
-        return [tuple(r) for r in rows], rowcount
-
-    def execute_atomic(self, statements: List[tuple]) -> None:
-        """Run several (sql, params) statements in ONE database transaction:
-        either all commit or none (a crash mid-sequence leaves the previous
-        state intact)."""
-        with self.lock:
-            cur = self.conn.cursor()
-            try:
-                for sql, params in statements:
-                    cur.execute(sql, params)
-                self.conn.commit()
-            except Exception:
-                self.conn.rollback()
-                raise
-            finally:
-                cur.close()
-
-    def close(self) -> None:
-        self.conn.close()
+__all__ = ["DbApiBookkeeper", "DbApiConnection", "DbApiJournal", "DbApiOffsetLedger"]
 
 
 class DbApiBookkeeper(Bookkeeper):
     """Bookkeeper rows in ``bk_records`` / ``bk_schemas``
-    (BookkeeperJdbc.scala): state replays at open, ``refresh()`` re-reads
-    to pick up concurrent drivers' records."""
+    (BookkeeperJdbc.scala)."""
 
     def __init__(self, db: DbApiConnection):
-        super().__init__()
-        self.db = db
-        self.refresh()
-
-    def _persist_chunk(self, chunk: DataChunk) -> None:
-        self.db.execute(
-            "INSERT INTO bk_records VALUES (?, ?, ?, ?, ?, ?, ?)",
-            (
-                chunk.table_name,
-                chunk.info_date,
-                int(chunk.input_record_count),
-                int(chunk.output_record_count),
-                float(chunk.job_started),
-                float(chunk.job_finished),
-                int(chunk.batch_id),
-            ),
+        super().__init__(
+            DbApiStore(db, "bk_records", DataChunk), DbApiStore(db, "bk_schemas", SchemaVersion)
         )
-
-    def _persist_schema(self, table: str, info_date: _dt.date, schema_json: str) -> None:
-        self.db.execute(
-            "INSERT INTO bk_schemas VALUES (?, ?, ?, ?)",
-            (table, info_date.isoformat(), schema_json, time.time()),
-        )
-
-    def refresh(self) -> None:
-        chunk_rows = self.db.execute(
-            "SELECT table_name, info_date, input_record_count, output_record_count, "
-            "job_started, job_finished, batch_id FROM bk_records "
-            "ORDER BY info_date, job_finished"
-        )
-        chunks = [
-            DataChunk(
-                table_name=r[0],
-                info_date=r[1],
-                input_record_count=r[2],
-                output_record_count=r[3],
-                job_started=r[4],
-                job_finished=r[5],
-                batch_id=r[6] or 0,
-            )
-            for r in chunk_rows
-        ]
-        schema_rows = self.db.execute(
-            "SELECT table_name, info_date, schema_json FROM bk_schemas "
-            "ORDER BY info_date, updated_at"
-        )
-        schemas: dict = {}
-        for table, info_date, schema_json in schema_rows:
-            schemas.setdefault(table, []).append((info_date, schema_json))
-        with self._lock:
-            self._chunks = chunks
-            self._schemas = schemas
 
 
 class DbApiJournal(Journal):
     """Run journal in the ``journal`` table (JournalJdbc.scala)."""
 
     def __init__(self, db: DbApiConnection):
-        super().__init__(path=None)
-        self.db = db
-
-    def add(self, entry: JournalEntry) -> None:
-        super().add(entry)  # local in-memory view for this driver's report
-        self.db.execute(
-            "INSERT INTO journal VALUES (?, ?, ?, ?, ?, ?, ?, ?)",
-            (
-                entry.table_name,
-                entry.info_date,
-                entry.status,
-                float(entry.started),
-                float(entry.finished),
-                int(entry.records),
-                entry.reason or "",
-                entry.error or "",
-            ),
-        )
-
-    def get_entries(self, from_ts: float, to_ts: float) -> List[JournalEntry]:
-        rows = self.db.execute(
-            "SELECT table_name, info_date, status, started, finished, records, "
-            "reason, error FROM journal WHERE finished >= ? AND finished <= ? "
-            "ORDER BY finished",
-            (float(from_ts), float(to_ts)),
-        )
-        return [JournalEntry(*r) for r in rows]
+        super().__init__(store=DbApiStore(db, "journal", JournalEntry))
 
 
 class DbApiOffsetLedger(OffsetLedger):
-    """Offset ledger in the ``offsets`` table (OffsetManagerJdbc.scala:36-91):
-    one row per transaction, commit/rollback are conditional single
-    statements (``committed_at IS NULL``), queries read the database so
-    concurrent drivers see each other's commits immediately."""
+    """Offset ledger in the ``offsets`` table (OffsetManagerJdbc.scala:36-91).
 
-    def __init__(self, db: DbApiConnection):
-        super().__init__(path=None)
-        self.db = db
+    Unlike the event-log ledgers, the table holds one row per transaction
+    and commit/rollback are conditional single statements (``committed_at
+    IS NULL``): the database, not this process, decides which of two
+    drivers commits a batch. Queries re-read the table, so concurrent
+    drivers see each other's commits immediately."""
 
     _KEY = "table_name = ? AND info_date = ? AND batch_id = ?"
+
+    def __init__(self, db: DbApiConnection):
+        self.db = db
+        super().__init__(store=DbApiStore(db, "offsets", OffsetRecord))
+
+    def refresh(self) -> None:
+        records = sorted(self._store.read(), key=lambda r: r.created_at)
+        with self._lock:
+            self._records = records
 
     def start_write(
         self, table: str, info_date: _dt.date, batch_id: int, offset_type: OffsetType
     ) -> OffsetTransaction:
-        day = info_date.isoformat()
+        rec = OffsetRecord(table, info_date.isoformat(), offset_type.value, batch_id, time.time())
         # re-start supersedes a stale open tx with the same key (same
-        # semantics as the JSONL ledger); committed rows are untouched.
+        # semantics as the event-log ledgers); committed rows are untouched.
         # One database transaction: a crash between the two statements
         # must not erase the orphan marker without replacing it (the
         # repair path finds orphan batches through these rows)
@@ -231,19 +76,14 @@ class DbApiOffsetLedger(OffsetLedger):
             [
                 (
                     f"DELETE FROM offsets WHERE {self._KEY} AND committed_at IS NULL",
-                    (table, day, batch_id),
+                    (table, rec.info_date, batch_id),
                 ),
-                (
-                    "INSERT INTO offsets VALUES (?, ?, ?, ?, ?, NULL, NULL, NULL)",
-                    (table, day, offset_type.value, batch_id, time.time()),
-                ),
+                self._store.insert(rec),
             ]
         )
-        return OffsetTransaction(table, day, batch_id)
+        return OffsetTransaction(table, rec.info_date, batch_id)
 
     def commit(self, tx: OffsetTransaction, min_offset: OffsetValue, max_offset: OffsetValue) -> None:
-        from pramen_spark.offsets.ledger import encode_offset
-
         _, rowcount = self.db.execute_with_rowcount(
             f"UPDATE offsets SET committed_at = ?, min_offset = ?, max_offset = ? "
             f"WHERE {self._KEY} AND committed_at IS NULL",
@@ -266,17 +106,3 @@ class DbApiOffsetLedger(OffsetLedger):
         )
         if rowcount == 0:
             raise KeyError(f"No open offset transaction for {tx}")
-
-    def get_offsets(self, table: str, info_date: Optional[_dt.date] = None) -> List[OffsetRecord]:
-        sql = (
-            "SELECT table_name, info_date, offset_type, batch_id, created_at, "
-            "committed_at, min_offset, max_offset FROM offsets WHERE table_name = ?"
-        )
-        params: tuple = (table,)
-        if info_date is not None:
-            sql += " AND info_date = ?"
-            params += (info_date.isoformat(),)
-        return [OffsetRecord(*r) for r in self.db.execute(sql + " ORDER BY created_at", params)]
-
-    def get_uncommitted(self, table: str) -> List[OffsetRecord]:
-        return [r for r in self.get_offsets(table) if not r.is_committed]

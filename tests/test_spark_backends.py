@@ -83,44 +83,7 @@ class TestSparkOffsetLedger:
 
 
 class TestSparkBookkeeper:
-    def test_roundtrip_chunks(self, spark, tmp_path):
-        path = str(tmp_path / "bk")
-        bk = SparkBookkeeper(spark, path)
-        bk.set_record_count("t", D, 100, 90, 1.0, 2.0, batch_id=7)
-        bk.set_record_count("t", D + dt.timedelta(days=1), 50, 50, 3.0, 4.0, batch_id=8)
-
-        reopened = SparkBookkeeper(spark, path)
-        assert reopened.get_latest_processed_date("t") == D + dt.timedelta(days=1)
-        chunk = reopened.get_latest_data_chunk("t", D)
-        assert chunk is not None
-        assert (chunk.input_record_count, chunk.output_record_count, chunk.batch_id) == (100, 90, 7)
-        assert reopened.get_data_chunks_count("t", D, D + dt.timedelta(days=1)) == 2
-
-    def test_roundtrip_schemas(self, spark, tmp_path):
-        import json
-
-        path = str(tmp_path / "bk")
-        bk = SparkBookkeeper(spark, path)
-        schema_v1 = json.dumps({"type": "struct", "fields": []})
-        schema_v2 = json.dumps(
-            {"type": "struct", "fields": [{"name": "a", "type": "long",
-                                           "nullable": True, "metadata": {}}]}
-        )
-        bk.save_schema("t", D, schema_v1)
-        bk.save_schema("t", D + dt.timedelta(days=1), schema_v2)
-
-        reopened = SparkBookkeeper(spark, path)
-        assert reopened.get_latest_schema("t") == json.loads(schema_v2)
-        assert reopened.get_latest_schema("t", until=D) == json.loads(schema_v1)
-
-    def test_refresh_sees_other_driver(self, spark, tmp_path):
-        path = str(tmp_path / "bk")
-        a = SparkBookkeeper(spark, path)
-        b = SparkBookkeeper(spark, path)
-        a.set_record_count("t", D, 10, 10, 1.0, 2.0)
-        assert b.get_latest_processed_date("t") is None  # in-memory view
-        b.refresh()
-        assert b.get_latest_processed_date("t") == D
+    """Round trips, schema history and refresh are in test_store_contract.py."""
 
     def test_data_availability(self, spark, tmp_path):
         bk = SparkBookkeeper(spark, str(tmp_path / "bk"))
