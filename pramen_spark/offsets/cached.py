@@ -4,7 +4,9 @@ Port of the reference's offset-manager caching decorator
 (core/.../bookkeeper/OffsetManagerCached.scala:30-82): only the aggregated
 min/max query is cached — it is the query incremental scheduling issues
 repeatedly for the same (table, info_date) within one run, and for the
-Spark-parquet and DBAPI ledgers each call is a storage round-trip.
+persistent ledgers each call goes to storage: a directory listing plus
+the files not read before (parquet), a Spark scan (delta) or a query
+(DBAPI).
 Raw-record queries (``get_offsets``/``get_uncommitted``) stay uncached,
 matching the reference: they are issued once per task and must always see
 live state (uncommitted-transaction repair depends on it).
@@ -44,7 +46,7 @@ class CachedOffsetLedger(OffsetLedger):
         self._cache_lock = threading.Lock()
         # Per-table invalidation generation. The reference's synchronized
         # method holds its monitor across miss-check + inner read + fill;
-        # doing that here would serialize every cache-miss Spark/DB read,
+        # doing that here would serialize every cache-miss storage read,
         # so instead the fill is guarded by a generation snapshot: a
         # commit/rollback that lands between the miss and the fill bumps
         # the generation and the stale fill is skipped (jobs run in a

@@ -133,7 +133,7 @@ class OffsetLedger:
 
     def compact(self) -> int:
         """Fold the store's small files; returns the number of events kept.
-        Safe only when no other driver is mid-write."""
+        Run it from one driver at a time (see the store's ``compact``)."""
         return self._store.compact()
 
     # --- protocol ---

@@ -8,17 +8,18 @@ table with uncommitted-row cleanup; here an append-only event dataset:
   :class:`pramen_spark.offsets.ledger.OffsetLedger`). Cross-driver clock
   skew only matters for events of the SAME (table, info_date, batch_id)
   transaction, which are always produced by one driver sequentially.
-- Appends from the threads of one driver are serialised per dataset. Parquet
-  appends from two drivers at once can abort each other in the shared
-  ``_temporary/0`` staging directory; with ``data_format="delta"`` each
-  append is an ACID transaction, safe across drivers.
+- With ``parquet`` each event is one uniquely-named file written through
+  the Hadoop file system (hidden temp file, then rename), with no Spark
+  job; with ``delta`` each append is an ACID transaction written by Spark.
+  Both are safe across drivers on a file system with atomic rename (local,
+  HDFS); for S3 see :class:`pramen_spark.store.ParquetStore`.
 - Query methods re-read the dataset first, so a driver sees transactions
   committed by other drivers after this ledger was opened.
 
-The event dataset is tiny (a few rows per task run, not per data row), so the
-per-query refresh is a sub-second scan even after years of daily runs;
-``compact()`` folds the event log into a single file when the small-file
-count grows.
+The event dataset is tiny (a few rows per task run, not per data row). A
+parquet refresh lists the directory and reads only the files it has not
+read before; ``compact()`` folds the event log into a single file when the
+file count grows.
 """
 
 from __future__ import annotations
@@ -26,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from pramen_spark.offsets.ledger import OffsetEvent, OffsetLedger
-from pramen_spark.store import SparkStore
+from pramen_spark.store import dataset_store
 
 
 class SparkOffsetLedger(OffsetLedger):
@@ -37,4 +38,4 @@ class SparkOffsetLedger(OffsetLedger):
     """
 
     def __init__(self, spark: SparkSession, path: str, data_format: str = "parquet"):
-        super().__init__(store=SparkStore(spark, path, OffsetEvent, data_format))
+        super().__init__(store=dataset_store(spark, path, OffsetEvent, data_format))

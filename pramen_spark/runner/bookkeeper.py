@@ -82,7 +82,7 @@ class Bookkeeper:
 
     def compact(self) -> int:
         """Fold both stores' small files; returns the total records kept.
-        Safe only when no other driver is mid-write."""
+        Run it from one driver at a time (see the stores' ``compact``)."""
         return self._chunk_store.compact() + self._schema_store.compact()
 
     # --- chunks ---

@@ -9,15 +9,15 @@ Layout under the bookkeeping location::
     {path}/schemas/   one row per captured schema version
     {path}/journal/   one row per task attempt
 
-Each dataset is append-only: each save appends a uniquely-named part file
-(Parquet) or an ACID transaction (Delta). Appends from the threads of one
-driver are serialised per dataset (see :class:`pramen_spark.store.SparkStore`);
-parquet appends from two drivers at once can abort each other in the shared
-``_temporary/0`` staging directory, so only ``delta`` is safe for concurrent
-drivers. Bookkeeping state is replayed into memory at open — a few rows per
+Each dataset is append-only. With ``parquet`` each save writes one
+uniquely-named file through the Hadoop file system (a hidden temp file,
+then a rename) and runs no Spark job; with ``delta`` it is one ACID
+transaction written by Spark. Both are safe across drivers on a file
+system with atomic rename (local, HDFS); for S3 see
+:class:`pramen_spark.store.ParquetStore`. Bookkeeping state is replayed into memory at open — a few rows per
 task run, small even after years of daily pipelines — and ``refresh()``
-re-reads it to pick up other drivers' writes. ``compact()`` folds the
-accumulated small files.
+re-reads only the files added since. ``compact()`` folds the accumulated
+small files.
 """
 
 from __future__ import annotations
@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from pramen_spark.runner.bookkeeper import Bookkeeper, DataChunk, Journal, JournalEntry, SchemaVersion
-from pramen_spark.store import SparkStore
+from pramen_spark.store import dataset_store
 
 
 class SparkBookkeeper(Bookkeeper):
@@ -39,8 +39,8 @@ class SparkBookkeeper(Bookkeeper):
     def __init__(self, spark: SparkSession, path: str, data_format: str = "parquet"):
         base = path.rstrip("/")
         super().__init__(
-            SparkStore(spark, f"{base}/records", DataChunk, data_format),
-            SparkStore(spark, f"{base}/schemas", SchemaVersion, data_format),
+            dataset_store(spark, f"{base}/records", DataChunk, data_format),
+            dataset_store(spark, f"{base}/schemas", SchemaVersion, data_format),
         )
 
 
@@ -52,4 +52,4 @@ class SparkJournal(Journal):
     """
 
     def __init__(self, spark: SparkSession, path: str, data_format: str = "parquet"):
-        super().__init__(store=SparkStore(spark, path, JournalEntry, data_format))
+        super().__init__(store=dataset_store(spark, path, JournalEntry, data_format))

@@ -6,13 +6,15 @@ A store holds records of one dataclass type and offers ``append(record)``,
 
 - :class:`MemoryStore` — a list (no persistence);
 - :class:`JsonLinesStore` — one JSON object per line of a file;
-- :class:`SparkStore` — a parquet or delta dataset, one append per record;
+- :class:`ParquetStore` — a parquet dataset, one file per append, written
+  and read through the Hadoop file system (:mod:`pramen_spark.fs`);
+- :class:`DeltaStore` — a delta table, one Spark write per append;
 - :class:`DbApiStore` — a table behind any DBAPI 2.0 connection.
 
 Every layout comes from the record's dataclass fields: their order is the
 column order, their annotations (``str``, ``int``, ``float``, optionally
-``Optional[...]``) the Spark and SQL column types and their names the JSON
-keys. A null read from storage, or a ``None`` written, stands for the
+``Optional[...]``) the Spark, Arrow and SQL column types and their names the
+JSON keys. A null read from storage, or a ``None`` written, stands for the
 field's default; a field without a default must not be null.
 
 ``read()`` returns records in no guaranteed order; callers sort.
@@ -25,6 +27,7 @@ import json
 import os
 import threading
 import typing
+import uuid
 from typing import Any, Callable, Dict, Generic, List, Mapping, Optional, Type, TypeVar
 
 from pyspark.errors import AnalysisException
@@ -54,15 +57,24 @@ def spark_schema(record_type: type) -> T.StructType:
     )
 
 
+def arrow_schema(record_type: type):
+    """The ``pyarrow`` schema of ``spark_schema(record_type)``: explicit, so
+    an all-null column is never inferred as another type."""
+    import pyarrow as pa
+
+    types = {str: pa.string(), int: pa.int64(), float: pa.float64()}
+    return pa.schema([pa.field(name, types[t]) for name, t in field_types(record_type).items()])
+
+
 def sql_columns(record_type: type) -> str:
     """Column definitions for ``CREATE TABLE``."""
     return ", ".join(f"{name} {_SQL_TYPES[t]}" for name, t in field_types(record_type).items())
 
 
 # One lock per storage path, shared by every store in the process that
-# appends to it: Spark stages each append to a path under
-# {path}/_temporary/0, so two concurrent appends delete each other's
-# staging files, and a long JSON line may reach the file in several writes.
+# opens it: a long JSON line may reach the file in several writes, Spark
+# stages each delta write under the table's path, and two compactions of
+# one parquet dataset at once would each keep its records.
 _PATH_LOCKS: Dict[str, threading.Lock] = {}
 _PATH_LOCKS_GUARD = threading.Lock()
 
@@ -105,8 +117,8 @@ class RecordStore(Generic[R]):
 
     def compact(self) -> int:
         """Fold the stored records into as few files as the backend allows;
-        returns the number of records kept. Safe only when no other driver
-        is mid-write."""
+        returns the number of records kept. Unless the backend says
+        otherwise, safe only when no other driver is mid-write."""
         return len(self.read())
 
 
@@ -144,30 +156,136 @@ class JsonLinesStore(RecordStore[R]):
         return [self._record(json.loads(line)) for line in lines if line.strip()]
 
 
-class SparkStore(RecordStore[R]):
-    """A parquet or delta dataset; each append writes one single-row part
-    file (parquet) or transaction (delta).
+class ParquetStore(RecordStore[R]):
+    """A parquet dataset kept in files through :mod:`pramen_spark.fs`, with
+    no Spark job; ``pyarrow`` is imported on first use, not with this
+    module.
 
-    Appends from one process are serialised per path. Parquet appends from
-    two driver processes can still collide in the shared ``_temporary/0``
-    staging directory; only delta is safe across drivers.
+    - Each append writes one ``part-<uuid>.parquet`` file (hidden temp file,
+      then rename), so appends never share a staging directory.
+    - ``read()`` is incremental: it keeps the records of every file it has
+      read, keyed by file name, lists the directory and reads only names it
+      has not seen; the records of names that have disappeared are dropped.
+    - ``compact()`` writes one combined file that names the files it
+      replaces in its parquet metadata, then deletes exactly those files.
+      A reader that lists the directory between the two steps skips the
+      replaced files, so a compaction by this driver or another one never
+      duplicates or loses records.
+
+    Files named ``_*`` or ``.*`` (``_SUCCESS``, checksums, temp files) are
+    not data, so a dataset written by Spark opens as well. Only a missing
+    directory reads as empty; a file that is not parquet raises.
+
+    Appends and reads are safe across drivers on a file system with atomic
+    rename (local, HDFS). On S3 (``s3a://``) a rename is a copy plus a
+    delete: an object still appears only whole and S3 lists what was
+    written, so no record is lost or seen twice, but each append costs
+    more requests, and a driver that dies mid-append can leave a hidden
+    temp object behind.
     """
 
-    def __init__(self, spark: SparkSession, path: str, record_type: Type[R],
-                 data_format: str = "parquet"):
-        if data_format not in ("parquet", "delta"):
-            raise ValueError(f"Unsupported Spark store format '{data_format}'")
+    REPLACES_KEY = b"pramen.replaces"
+
+    def __init__(self, spark: SparkSession, path: str, record_type: Type[R]):
+        from pramen_spark.fs import HadoopFs
+
+        super().__init__(record_type)
+        self.path = path.rstrip("/")
+        self.fs = HadoopFs(spark, self.path)
+        self._parts: Dict[str, tuple] = {}  # file name -> (records, names it replaces)
+        self._parts_lock = threading.Lock()
+        self._compact_lock = _path_lock(self.path)
+
+    def _write_file(self, records: List[R], replaces: frozenset = frozenset()) -> str:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        schema = arrow_schema(self.record_type)
+        if replaces:
+            schema = schema.with_metadata({self.REPLACES_KEY: json.dumps(sorted(replaces))})
+        table = pa.Table.from_pylist([self._row(r) for r in records], schema=schema)
+        sink = pa.BufferOutputStream()
+        pq.write_table(table, sink, compression="snappy")
+        name = f"part-{uuid.uuid4()}.parquet"
+        self.fs.write_atomic(f"{self.path}/{name}", sink.getvalue().to_pybytes())
+        return name
+
+    def _read_file(self, name: str) -> tuple:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        table = pq.read_table(pa.BufferReader(self.fs.read_bytes(f"{self.path}/{name}")))
+        replaces = (table.schema.metadata or {}).get(self.REPLACES_KEY)
+        records = [self._record(row) for row in table.to_pylist()]
+        return records, frozenset(json.loads(replaces) if replaces else ())
+
+    def _list(self) -> Dict[str, tuple]:
+        """File name -> (records, names it replaces) for every data file
+        in the directory now; ``{}`` if the directory does not exist."""
+        while True:
+            try:
+                names = {
+                    n for n in self.fs.list(self.path)
+                    if n.endswith(".parquet") and not n.startswith((".", "_"))
+                }
+            except FileNotFoundError:
+                return {}
+            with self._parts_lock:
+                known = {n: self._parts[n] for n in names if n in self._parts}
+            try:
+                parts = {n: known[n] if n in known else self._read_file(n) for n in names}
+            except FileNotFoundError:
+                continue  # a compaction replaced a listed file: list again
+            with self._parts_lock:
+                self._parts = dict(parts)
+            return parts
+
+    @staticmethod
+    def _records(parts: Mapping[str, tuple]) -> List[R]:
+        """The records of the files no other listed file replaces."""
+        replaced = set().union(*(rep for _, rep in parts.values()))
+        return [r for n, (recs, _) in parts.items() if n not in replaced for r in recs]
+
+    def append(self, record: R) -> None:
+        self._write_file([record])
+
+    def read(self) -> List[R]:
+        return self._records(self._list())
+
+    def compact(self) -> int:
+        """Rewrite the dataset as one file. Appends and reads by other
+        drivers may go on meanwhile; two compactions of one dataset at once
+        would each keep the records, so run it from one driver at a time
+        (the threads of one process take turns)."""
+        with self._compact_lock:
+            parts = self._list()
+            records = self._records(parts)
+            if len(parts) > 1:
+                replaces = frozenset(parts)
+                name = self._write_file(records, replaces)
+                with self._parts_lock:
+                    self._parts[name] = (records, replaces)
+                for old in replaces:
+                    self.fs.delete(f"{self.path}/{old}")
+        return len(records)
+
+
+class DeltaStore(RecordStore[R]):
+    """A delta table written through Spark; each append is one
+    transaction, safe across drivers. Appends from one process are
+    serialised per path."""
+
+    def __init__(self, spark: SparkSession, path: str, record_type: Type[R]):
         super().__init__(record_type)
         self.spark = spark
         self.path = path.rstrip("/")
-        self.data_format = data_format
         self.schema = spark_schema(record_type)
         self._lock = _path_lock(self.path)
 
     def _write(self, records: List[R], mode: str) -> None:
         rows = [tuple(self._row(r).values()) for r in records]
         df = self.spark.createDataFrame(rows, schema=self.schema)
-        df.coalesce(1).write.format(self.data_format).mode(mode).save(self.path)
+        df.coalesce(1).write.format("delta").mode(mode).save(self.path)
 
     def append(self, record: R) -> None:
         with self._lock:
@@ -175,18 +293,28 @@ class SparkStore(RecordStore[R]):
 
     def read(self) -> List[R]:
         try:
-            df = self.spark.read.format(self.data_format).load(self.path)
-        except AnalysisException:  # dataset not created yet
+            df = self.spark.read.format("delta").load(self.path)
+        except AnalysisException:  # table not created yet
             return []
         return [self._record(row.asDict()) for row in df.collect()]
 
     def compact(self) -> int:
-        """Rewrite the dataset as one file."""
+        """Rewrite the table as one file."""
         with self._lock:
             records = self.read()
             if records:
                 self._write(records, "overwrite")
         return len(records)
+
+
+def dataset_store(spark: SparkSession, path: str, record_type: Type[R],
+                  data_format: str = "parquet") -> RecordStore[R]:
+    """The store for a ``parquet`` or ``delta`` dataset at ``path``."""
+    if data_format == "parquet":
+        return ParquetStore(spark, path, record_type)
+    if data_format == "delta":
+        return DeltaStore(spark, path, record_type)
+    raise ValueError(f"Unsupported dataset store format '{data_format}'")
 
 
 class DbApiConnection:

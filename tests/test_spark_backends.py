@@ -32,31 +32,6 @@ class TestSparkOffsetLedger:
         ledger.rollback(tx)
         assert ledger.get_offsets("t") == []
 
-    def test_replay_from_storage(self, spark, tmp_path):
-        path = str(tmp_path / "offsets")
-        ledger = SparkOffsetLedger(spark, path)
-        tx1 = ledger.start_write("t", D, 1, OffsetType.INTEGRAL)
-        ledger.commit(tx1, OffsetValue.integral(1), OffsetValue.integral(100))
-        ledger.start_write("t", D, 2, OffsetType.INTEGRAL)  # uncommitted (crash)
-
-        recovered = SparkOffsetLedger(spark, path)
-        assert len(recovered.get_offsets("t")) == 2
-        unc = recovered.get_uncommitted("t")
-        assert len(unc) == 1 and unc[0].batch_id == 2
-        latest = recovered.get_max_info_date_and_offset("t")
-        assert latest[2].value == 100  # only committed offsets count
-
-    def test_concurrent_driver_visibility(self, spark, tmp_path):
-        """A second ledger over the same path sees commits made after it was
-        opened (the multi-driver scenario JSONL cannot serve)."""
-        path = str(tmp_path / "offsets")
-        a = SparkOffsetLedger(spark, path)
-        b = SparkOffsetLedger(spark, path)
-        tx = a.start_write("t", D, 1, OffsetType.INTEGRAL)
-        a.commit(tx, OffsetValue.integral(1), OffsetValue.integral(42))
-        latest = b.get_max_info_date_and_offset("t")
-        assert latest is not None and latest[2].value == 42
-
     def test_datetime_offsets(self, spark, tmp_path):
         ledger = SparkOffsetLedger(spark, str(tmp_path / "offsets"))
         ts0 = dt.datetime(2024, 1, 10, 8, 0, tzinfo=dt.timezone.utc)
@@ -92,15 +67,6 @@ class TestSparkBookkeeper:
         avail = bk.get_data_availability("t", D, D)
         assert avail == {D: 2}
 
-    def test_compact(self, spark, tmp_path):
-        path = str(tmp_path / "bk")
-        bk = SparkBookkeeper(spark, path)
-        for i in range(3):
-            bk.set_record_count("t", D, i, i, 1.0, 2.0)
-        assert bk.compact() == 3
-        assert SparkBookkeeper(spark, path).get_data_chunks_count("t", D, D) == 3
-
-
 class TestSparkJournal:
     @staticmethod
     def _entry(table, finished, status="Succeeded", records=10):
@@ -112,25 +78,6 @@ class TestSparkJournal:
             finished=finished,
             records=records,
         )
-
-    def test_roundtrip_and_time_range(self, spark, tmp_path):
-        j = SparkJournal(spark, str(tmp_path / "journal"))
-        j.add(self._entry("a", 10.0))
-        j.add(self._entry("b", 20.0, status="Failed", records=0))
-        j.add(self._entry("c", 30.0))
-        got = j.get_entries(15.0, 25.0)
-        assert [e.table_name for e in got] == ["b"]
-        assert got[0].status == "Failed"
-        everything = j.get_entries(0.0, 100.0)
-        assert [e.table_name for e in everything] == ["a", "b", "c"]
-
-    def test_other_driver_entries_visible(self, spark, tmp_path):
-        path = str(tmp_path / "journal")
-        a = SparkJournal(spark, path)
-        b = SparkJournal(spark, path)
-        a.add(self._entry("t", 5.0))
-        assert b.entries == []  # local in-memory view
-        assert [e.table_name for e in b.get_entries(0.0, 10.0)] == ["t"]
 
     def test_empty_journal(self, spark, tmp_path):
         j = SparkJournal(spark, str(tmp_path / "journal"))

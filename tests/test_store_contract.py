@@ -1,6 +1,6 @@
 """One contract for the bookkeeper, run journal and offset ledger, run over
-every record-store backend: memory, JSON lines, Spark parquet and DBAPI
-(sqlite). Each backend opens any number of instances over one storage
+every record-store backend: memory, JSON lines, Spark parquet (by plain
+path and by ``file:///`` URI) and DBAPI (sqlite). Each backend opens any number of instances over one storage
 location, so "reopen" and "a second driver" are both a fresh instance."""
 
 import datetime as dt
@@ -78,6 +78,15 @@ class SparkParquetBackend:
         return SparkOffsetLedger(self.spark, f"{self.root}/offsets")
 
 
+class SparkParquetUriBackend(SparkParquetBackend):
+    """The parquet datasets opened by ``file:///`` URI: the same Hadoop
+    FileSystem code path as ``hdfs://`` or ``s3a://`` locations."""
+
+    def __init__(self, tmp_path, spark):
+        super().__init__(tmp_path, spark)
+        self.root = (tmp_path / "bk").as_uri()
+
+
 class DbApiSqliteBackend:
     def __init__(self, tmp_path, spark):
         self.path = str(tmp_path / "bk.db")
@@ -96,13 +105,14 @@ BACKENDS = {
     "memory": MemoryBackend,
     "jsonl": JsonLinesBackend,
     "spark_parquet": SparkParquetBackend,
+    "spark_parquet_uri": SparkParquetUriBackend,
     "dbapi_sqlite": DbApiSqliteBackend,
 }
 
 
 @pytest.fixture(params=list(BACKENDS))
 def backend(request, tmp_path):
-    spark = request.getfixturevalue("spark") if request.param == "spark_parquet" else None
+    spark = request.getfixturevalue("spark") if request.param.startswith("spark") else None
     return BACKENDS[request.param](tmp_path, spark)
 
 
@@ -159,6 +169,18 @@ class TestBookkeeperContract:
             bk.set_record_count("t", D, i, i, 1.0, 2.0)
         assert bk.compact() == 3
         assert backend.bookkeeper().get_data_chunks_count("t", D, D) == 3
+
+    def test_refresh_after_second_instance_compacts(self, backend):
+        """A driver that has read the records sees each exactly once after
+        another driver compacts them, along with what came after."""
+        a, b = backend.bookkeeper(), backend.bookkeeper()
+        for i in range(3):
+            a.set_record_count("t", D, i, i, 1.0, 2.0)
+        a.refresh()
+        assert b.compact() == 3
+        b.set_record_count("t", D1, 9, 9, 3.0, 4.0)
+        a.refresh()
+        assert a.get_data_availability("t", D, D1) == {D: 3, D1: 1}
 
 
 class TestJournalContract:
