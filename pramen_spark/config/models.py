@@ -67,6 +67,12 @@ class PartitionInfo:
             kind="per_record_count", records_per_partition=rpp, prefer_coalesce=prefer_coalesce
         )
 
+    @property
+    def sized_by_count(self) -> bool:
+        """True when the partition count derives from the row count, which
+        must then be known before the write."""
+        return self.kind == "per_record_count" and bool(self.records_per_partition)
+
 
 class PartitionScheme(str, Enum):
     """api/.../PartitionScheme.scala:19-35."""

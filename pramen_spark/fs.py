@@ -38,11 +38,13 @@ class HadoopFs:
     path on that same file system."""
 
     def __init__(self, spark: SparkSession, path: str):
-        self._jvm = spark._jvm
+        # py4j resolves each dotted step of a JVM name with a call of its
+        # own: look the classes and static methods up once
+        jvm = spark._jvm
+        self._path = jvm.org.apache.hadoop.fs.Path
+        self._stat2paths = jvm.org.apache.hadoop.fs.FileUtil.stat2Paths
+        self._array_to_string = jvm.org.apache.commons.lang3.ArrayUtils.toString
         self._fs = self._path(path).getFileSystem(spark._jsc.hadoopConfiguration())
-
-    def _path(self, path: str):
-        return self._jvm.org.apache.hadoop.fs.Path(path)
 
     def exists(self, path: str) -> bool:
         return bool(self._fs.exists(self._path(path)))
@@ -52,7 +54,16 @@ class HadoopFs:
         ``FileNotFoundError`` if it does not exist."""
         with _not_found_as_python():
             statuses = self._fs.listStatus(self._path(path))
-        return [status.getPath().getName() for status in statuses]
+        # All entry paths in one string, "{p1,p2,...}", built on the JVM
+        # side: five py4j calls whatever the entry count, not three per
+        # entry. (py4j passes a Path[] to no Object[] parameter, so
+        # StringUtils.join is out of reach; ArrayUtils.toString takes Object.)
+        joined = self._array_to_string(self._stat2paths(statuses))[1:-1]
+        names = [p.rsplit("/", 1)[-1] for p in joined.split(",")] if joined else []
+        if len(names) != len(statuses):
+            # a path holds a comma: ask for each name on its own
+            return [status.getPath().getName() for status in statuses]
+        return names
 
     def read_bytes(self, path: str) -> bytes:
         """The whole file; ``FileNotFoundError`` if it does not exist."""

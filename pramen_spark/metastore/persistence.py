@@ -19,18 +19,23 @@ partition column so Catalyst prunes partitions; single-date reads go
 straight to the partition directory (skips listing + schema merge of the
 full dataset). Writes repartition by PartitionInfo so output file count is
 controlled (records-per-partition sizing rather than task-count artifacts).
+Parquet writes count their rows inside the write job (``counted``), so the
+source plan runs once per save; only records-per-partition sizing counts
+before the write.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+import logging
 import math
 import os
 import shutil
+import time
 from dataclasses import dataclass
-from typing import Dict, List, Optional, Tuple
+from typing import Callable, Dict, List, Optional, Tuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -44,6 +49,14 @@ from pramen_spark.config.models import (
 )
 
 
+_log = logging.getLogger(__name__)
+
+# Spark completes an Observation from a query listener on its asynchronous
+# listener bus, so the count lands a moment after the write returns. A bus
+# that drops events never completes it; past this wait the frame is counted.
+OBSERVED_COUNT_WAIT_S = 60.0
+
+
 @dataclass
 class WriteResult:
     records: int
@@ -51,13 +64,46 @@ class WriteResult:
     size_bytes: Optional[int] = None
 
 
+def counted(df: DataFrame) -> Tuple[DataFrame, Callable[[], int]]:
+    """``df`` with its rows counted by whichever action runs it first, and
+    a callable that returns that count.
+
+    The count rides on the write job as an ``Observation``, so the plan
+    runs once instead of once for ``count()`` and again for the write.
+    Call ``get_count`` only after an action on the returned frame has
+    returned: before that the count does not exist, and after a failed
+    action it is partial. Take a new pair for each write attempt; an
+    ``Observation`` serves one action. Observe the frame as written, after
+    any repartition: Spark applies a count gathered in the action's last
+    stage once per task, but one gathered in an earlier shuffle stage
+    again whenever that stage is retried."""
+    observation = Observation()
+    observed = df.observe(observation, F.count(F.lit(1)).alias("records"))
+
+    def get_count() -> int:
+        future = observation._jo.future()
+        deadline = time.monotonic() + OBSERVED_COUNT_WAIT_S
+        while not future.isCompleted():
+            if time.monotonic() > deadline:
+                _log.warning(
+                    "No observed row count %.0f s after the write; counting the frame",
+                    OBSERVED_COUNT_WAIT_S,
+                )
+                return df.count()
+            time.sleep(0.005)
+        return int(observation.get["records"])
+
+    return observed, get_count
+
+
 def apply_repartitioning(df: DataFrame, info: PartitionInfo, record_count: int) -> DataFrame:
     """PartitionInfo -> repartition/coalesce
     (MetastorePersistenceParquet companion applyPartitioning;
-    pramen-py/src/pramen_py/metastore/writer.py:108-119)."""
+    pramen-py/src/pramen_py/metastore/writer.py:108-119).
+    ``record_count`` is read only when ``info.sized_by_count``."""
     if info.kind == "explicit" and info.num_partitions:
         return df.repartition(info.num_partitions)
-    if info.kind == "per_record_count" and info.records_per_partition:
+    if info.sized_by_count:
         n = max(1, math.ceil(record_count / info.records_per_partition))
         if info.prefer_coalesce:
             return df.coalesce(n)
@@ -151,16 +197,20 @@ class ParquetPersistence(MetastorePersistence):
         save_mode = self.table.save_mode or "overwrite"
         if self.table.info_date_column in df.columns:
             df = df.drop(self.table.info_date_column)
-        count = df.count()
-        df = apply_repartitioning(df, self.table.format.partition_info, count)
+        info = self.table.format.partition_info
+        count = df.count() if info.sized_by_count else None
+        df = apply_repartitioning(df, info, count or 0)
+        df, get_count = counted(df) if count is None else (df, lambda: count)
         writer = df.write.mode(save_mode)
         for k, v in self.table.write_options.items():
             writer = writer.option(k, v)
         writer.parquet(out_dir)
-        total = count
+        written = get_count()
+        total = written
         if save_mode == "append":
-            total = self.spark.read.parquet(out_dir).count()
-        return WriteResult(records=total, records_appended=count, size_bytes=_dir_size(out_dir))
+            # the known schema spares the footer-reading schema inference job
+            total = self.spark.read.schema(df.schema).parquet(out_dir).count()
+        return WriteResult(records=total, records_appended=written, size_bytes=_dir_size(out_dir))
 
     def get_available_dates(self) -> List[_dt.date]:
         prefix = f"{self.table.info_date_column}="
@@ -217,6 +267,8 @@ class DeltaPersistence(MetastorePersistence):
     def save_table(self, df: DataFrame, info_date: _dt.date) -> WriteResult:
         col = self.table.info_date_column
         df = df.withColumn(col, F.lit(info_date.isoformat()).cast(T.DateType()))
+        # Counts before the write, unlike parquet (``counted``): without
+        # delta-spark the observed count cannot be tested on this backend.
         count = df.count()
         df = apply_repartitioning(df, self.table.format.partition_info, count)
         df, part_cols = self._with_generated_partitions(df)
@@ -287,6 +339,8 @@ class IcebergPersistence(MetastorePersistence):
     def save_table(self, df: DataFrame, info_date: _dt.date) -> WriteResult:
         col = self.table.info_date_column
         df = df.withColumn(col, F.lit(info_date.isoformat()).cast(T.DateType()))
+        # Counts before the write, unlike parquet (``counted``): without an
+        # Iceberg runtime the observed count cannot be tested on this backend.
         count = df.count()
         df = apply_repartitioning(df, self.table.format.partition_info, count)
         exists = self.spark.catalog.tableExists(self.table_name)

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pramen_spark.api import Sink
+from pramen_spark.metastore.persistence import counted
 
 
 class LocalCsvSink(Sink):
@@ -51,15 +52,17 @@ class LocalCsvSink(Sink):
         elif transform == "make_lower":
             df = df.toDF(*[c.lower() for c in df.columns])
 
-        count = df.count()
+        # the CSV write job counts the rows: the plan runs once
+        df, get_count = counted(df.coalesce(1))
 
         tmp = tempfile.mkdtemp(prefix="csv_sink_")
         try:
-            writer = df.coalesce(1).write.mode("overwrite")
+            writer = df.write.mode("overwrite")
             for k, v in opts.items():
                 if k.startswith("csv."):
                     writer = writer.option(k[len("csv.") :], v)
             writer.csv(tmp)
+            count = get_count()
             parts = glob.glob(os.path.join(tmp, "part-*"))
             if not parts:
                 return 0

@@ -14,6 +14,7 @@ from typing import Any, Dict
 from pyspark.sql import DataFrame
 
 from pramen_spark.api import Sink
+from pramen_spark.metastore.persistence import counted
 
 
 class SparkSink(Sink):
@@ -30,17 +31,23 @@ class SparkSink(Sink):
         opts = {**self.options, **options}
         fmt = opts.get("format", "parquet")
         mode = opts.get("mode", "overwrite")
-        count = df.count()
-
-        if count == 0 and str(opts.get("save.empty", "true")).lower() != "true":
-            return 0
-
         n_partitions = opts.get("number.of.partitions")
         rpp = opts.get("records.per.partition")
+        save_empty = str(opts.get("save.empty", "true")).lower() == "true"
+
+        # Records-per-partition sizing and skipping empty output need the
+        # count before the write; otherwise the write job counts the rows.
+        count = None
+        if not save_empty or (rpp is not None and n_partitions is None):
+            count = df.count()
+            if count == 0 and not save_empty:
+                return 0
+
         if n_partitions is not None:
             df = df.repartition(int(n_partitions))
         elif rpp is not None:
             df = df.repartition(max(1, math.ceil(count / int(rpp))))
+        df, get_count = counted(df) if count is None else (df, lambda: count)
 
         writer = df.write.format(fmt).mode(mode)
         if opts.get("partition.by"):
@@ -59,4 +66,4 @@ class SparkSink(Sink):
             writer.saveAsTable(opts["table"])
         else:
             raise ValueError("SparkSink requires 'path' or 'table' option")
-        return count
+        return get_count()

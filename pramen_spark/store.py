@@ -30,7 +30,6 @@ import typing
 import uuid
 from typing import Any, Callable, Dict, Generic, List, Mapping, Optional, Type, TypeVar
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
@@ -292,10 +291,14 @@ class DeltaStore(RecordStore[R]):
             self._write([record], "append")
 
     def read(self) -> List[R]:
-        try:
-            df = self.spark.read.format("delta").load(self.path)
-        except AnalysisException:  # table not created yet
+        """``[]`` only when the table's directory does not exist; any other
+        error, such as a directory that is not a loadable delta table,
+        raises rather than reading as no records."""
+        from pramen_spark.fs import HadoopFs
+
+        if not HadoopFs(self.spark, self.path).exists(self.path):
             return []
+        df = self.spark.read.format("delta").load(self.path)
         return [self._record(row.asDict()) for row in df.collect()]
 
     def compact(self) -> int:

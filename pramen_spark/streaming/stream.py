@@ -193,7 +193,10 @@ def _sessionize_fn(gap_seconds: float):
         # all but the last are closed by an in-batch gap; last stays open
         *closed, open_s = sessions
         state.update((int(open_s[0]), int(open_s[1]), int(open_s[2])))
-        state.setTimeoutDuration(int(gap_seconds * 1000))
+        # the session closes once the watermark passes its last event
+        # plus the gap; late rows are dropped before they get here, so
+        # this deadline is never behind the watermark
+        state.setTimeoutTimestamp((int(open_s[1]) + gap_us) // 1000)
         if closed:
             yield _session_frame(user_id, closed)
 
@@ -208,15 +211,22 @@ def sessionize(
 ) -> DataFrame:
     """Session windows with an inactivity gap via applyInPandasWithState —
     the custom-stateful-operator pattern (state: per-user open session;
-    output: closed sessions)."""
+    output: closed sessions).
+
+    Sessions close on event time: the input carries a watermark of one
+    gap, and an open session times out once the watermark passes its last
+    event plus the gap. A processing-time timeout would make Spark plan
+    another batch forever, so an ``availableNow`` query never ended."""
     gap_seconds = _parse_duration_seconds(gap)
-    events = df.select(F.col(user_col).alias("user_id"), F.col(ts_col).alias("ts"))
+    events = df.select(
+        F.col(user_col).alias("user_id"), F.col(ts_col).alias("ts")
+    ).withWatermark("ts", gap)
     return events.groupBy("user_id").applyInPandasWithState(
         _sessionize_fn(gap_seconds),
         outputStructType=SESSION_SCHEMA,
         stateStructType=_STATE_SCHEMA,
         outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
 
 

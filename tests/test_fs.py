@@ -44,3 +44,53 @@ def test_plain_path_and_uri_see_the_same_files(spark, tmp_path):
     path, uri = str(tmp_path / "x"), (tmp_path / "x").as_uri()
     HadoopFs(spark, path).write_atomic(f"{path}/f", b"1")
     assert HadoopFs(spark, uri).read_bytes(f"{uri}/f") == b"1"
+
+
+def _count_py4j_calls(spark, fn):
+    """``fn()`` and the number of py4j commands it sent."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        result = fn()
+    finally:
+        del client.send_command
+    return result, len(calls)
+
+
+def test_list_makes_a_fixed_number_of_py4j_calls(spark, root):
+    fs = HadoopFs(spark, root)
+    fs.write_atomic(f"{root}/few/f0", b"")
+    for i in range(40):
+        fs.write_atomic(f"{root}/many/f{i}", b"")
+    few, few_calls = _count_py4j_calls(spark, lambda: fs.list(f"{root}/few"))
+    many, many_calls = _count_py4j_calls(spark, lambda: fs.list(f"{root}/many"))
+    assert [n for n in few if not n.startswith(".")] == ["f0"]
+    assert sorted(n for n in many if not n.startswith(".")) == sorted(f"f{i}" for i in range(40))
+    assert many_calls == few_calls == 5  # not three more per entry
+    fs.write_atomic(f"{root}/empty/x", b"")
+    fs.delete(f"{root}/empty/x")
+    assert [n for n in fs.list(f"{root}/empty") if not n.startswith(".")] == []
+
+
+def test_list_round_trips_unusual_names(spark, root, tmp_path):
+    """Names with the join separator (a comma), the URI escape and
+    fragment characters, braces, spaces and non-ASCII letters come back
+    exactly, never split or decoded."""
+    names = {"a b", "c,d", "x%20y", "h#1", "{br}", "}", "ünï", "e,", "plain.parquet"}
+    d = tmp_path / "odd"
+    d.mkdir()
+    for n in names:
+        (d / n).write_bytes(b"")
+    where = str(d) if "://" not in root else d.as_uri()
+    fs = HadoopFs(spark, where)
+    assert set(fs.list(where)) == names
+    (d / "c,d").unlink()
+    (d / "e,").unlink()
+    assert set(fs.list(where)) == names - {"c,d", "e,"}

@@ -20,7 +20,7 @@ import pytest
 
 from pramen_spark.runner.bookkeeper import JournalEntry
 from pramen_spark.runner.spark_bookkeeper import SparkBookkeeper, SparkJournal
-from pramen_spark.store import ParquetStore, arrow_schema, spark_schema
+from pramen_spark.store import DeltaStore, ParquetStore, arrow_schema, spark_schema
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WAIT_S = 300
@@ -217,3 +217,19 @@ def test_only_a_missing_directory_reads_as_empty(spark, tmp_path):
     (base / "records" / "part-x.parquet").write_bytes(b"not parquet")
     with pytest.raises(pa.ArrowInvalid):
         SparkBookkeeper(spark, str(base))
+
+
+def test_delta_store_reads_empty_only_when_the_table_is_missing(spark, tmp_path):
+    """A directory that is not a loadable delta table raises, as an
+    unreadable parquet file does; only a missing path reads as empty.
+    Holds without delta-spark: there the load itself fails."""
+    store = DeltaStore(spark, str(tmp_path / "journal"), JournalEntry)
+    assert store.read() == []
+    (tmp_path / "journal").mkdir()
+    (tmp_path / "journal" / "part-x.parquet").write_bytes(b"not a delta table")
+    with pytest.raises(Exception):
+        store.read()
+    uri_store = DeltaStore(spark, (tmp_path / "journal").as_uri(), JournalEntry)
+    with pytest.raises(Exception):
+        uri_store.read()
+    assert DeltaStore(spark, (tmp_path / "nope").as_uri(), JournalEntry).read() == []

@@ -51,7 +51,11 @@ def run_available_now(stream_df, sink_fn=None, query_name="q"):
             .option("checkpointLocation", f"/tmp/ckpt_{query_name}_{time.time_ns()}")
             .start()
         )
-    q.awaitTermination(120)
+    try:
+        terminated = q.awaitTermination(120)
+    finally:
+        q.stop()
+    assert terminated, f"availableNow query {query_name} still running after 120 s"
     return q
 
 
