@@ -47,6 +47,7 @@ from pramen_spark.config.models import (
     PartitionScheme,
     TableConfig,
 )
+from pramen_spark.session import local_frame
 
 
 _log = logging.getLogger(__name__)
@@ -401,7 +402,7 @@ class RawPersistence(MetastorePersistence):
                 T.StructField("file_name", T.StringType()),
             ]
         )
-        return self.spark.createDataFrame(files, schema)
+        return local_frame(self.spark, files, schema)
 
     def save_table(self, df: DataFrame, info_date: _dt.date) -> WriteResult:
         # df is a list of source file paths (column ``path``)

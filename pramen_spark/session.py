@@ -4,13 +4,18 @@ Scale posture: AQE on (runtime re-plan + skew-join handling), shuffle
 partitions sized to the local core count (on a real cluster this is set per
 deployment or left to AQE coalescing), Arrow enabled for the Pandas-UDF
 paths, UTC session timezone for deterministic date semantics.
+
+``local_frame`` turns rows held by the driver into a frame through Arrow
+batches, so no Python worker starts for them.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def build_session(
@@ -48,3 +53,41 @@ def build_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: Sequence[tuple], schema: T.StructType) -> DataFrame:
+    """A frame of ``rows`` (tuples in ``schema``'s field order) built on the
+    driver.
+
+    The rows go to the JVM as Arrow record batches and Spark plans them as a
+    ``LocalRelation``, so running the frame starts no Python worker, unlike
+    ``createDataFrame(rows, schema)``, which parallelizes pickled rows behind
+    a Python ``map``. Neither ``spark.sql.execution.arrow.pyspark.enabled``
+    nor any other setting changes this path.
+
+    Values land as that row path puts them: each row passes the same
+    verifier, so what it rejects (a string in a long column, an int beyond
+    the long range) still raises here, and a naive ``datetime`` in a
+    ``TimestampType`` column is read in the process's local zone, as
+    ``TimestampType.toInternal`` does, not as UTC. One difference: the row
+    path stores any value in a string column as the JVM's ``toString`` of
+    it (``True`` as ``'true'``), while here a value that is not a ``str``
+    raises.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _make_type_verifier
+
+    verify = _make_type_verifier(schema)
+    for row in rows:
+        verify(row)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    arrays = []
+    for field, arrow_field, values in zip(schema.fields, arrow_schema, columns):
+        if isinstance(field.dataType, T.TimestampType):
+            # epoch microseconds, as the row path computes them
+            values = [field.dataType.toInternal(v) for v in values]
+        arrays.append(pa.array(values, type=arrow_field.type))
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, schema=schema)

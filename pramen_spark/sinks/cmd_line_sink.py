@@ -17,6 +17,7 @@ from typing import Any, Dict
 from pyspark.sql import DataFrame
 
 from pramen_spark.api import Sink
+from pramen_spark.metastore.persistence import counted
 
 
 class CmdLineSink(Sink):
@@ -37,11 +38,15 @@ class CmdLineSink(Sink):
         if not cmd_template:
             raise ValueError("CmdLineSink requires the 'cmd.line' option")
 
-        count = df.count()
         data_path = ""
         if opts.get("format"):
+            # the write job counts the rows: the plan runs once
+            df, get_count = counted(df)
             data_path = tempfile.mkdtemp(prefix="cmd_sink_")
             df.write.mode("overwrite").format(opts["format"]).save(data_path)
+            count = get_count()
+        else:
+            count = df.count()
 
         cmd = (
             cmd_template.replace("@infoDate", info_date.isoformat())

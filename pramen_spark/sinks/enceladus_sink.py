@@ -21,6 +21,7 @@ from typing import Any, Dict, Optional
 from pyspark.sql import DataFrame
 
 from pramen_spark.api import Sink
+from pramen_spark.metastore.persistence import counted
 
 
 def partition_path(
@@ -118,15 +119,21 @@ class EnceladusSink(Sink):
         version = int(merged.get("version", 0)) or detect_next_version(
             base_path, info_date, pattern
         )
-        count = df.count()
-        if count == 0 and not merged.get("save.empty", True):
-            return 0
+        # save.empty = false needs the count before the write; otherwise
+        # the write job counts the rows: the plan runs once
+        count = None
+        if not merged.get("save.empty", True):
+            count = df.count()
+            if count == 0:
+                return 0
+        df, get_count = counted(df) if count is None else (df, lambda: count)
         out_path = partition_path(base_path, info_date, version, pattern)
         writer = df.write.mode("overwrite").format(fmt)
         for k, v in merged.items():
             if k.startswith("option."):
                 writer = writer.option(k[len("option.") :], v)
         writer.save(out_path)
+        count = get_count()
         if merged.get("info.file.generate", True):
             info = build_info_file(table_name, info_date, version, count)
             with open(os.path.join(out_path, "_INFO"), "w") as f:

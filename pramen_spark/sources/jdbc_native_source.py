@@ -13,10 +13,13 @@ else plugs in via ``connection.factory`` ("pkg.module:callable" returning
 an open connection).
 
 Scale note: like the reference, a native read materializes through ONE
-connection on the driver, then parallelizes via ``createDataFrame`` —
-it is the escape hatch for control-plane and medium result sets, not the
-bulk path (that is ``JdbcSource``, where Spark's JDBC reader partitions
-the read).  ``fetch.size`` bounds driver memory per batch.
+connection on the driver. The rows then reach the JVM as Arrow record
+batches (``session.local_frame``) and Spark plans them as a
+``LocalRelation``, so no Python worker starts: like the reference's
+JVM-side reader, the write that follows runs no Python. It is the escape
+hatch for control-plane and medium result sets, not the bulk path (that
+is ``JdbcSource``, where Spark's JDBC reader partitions the read).
+``fetch.size`` bounds driver memory per batch.
 """
 
 from __future__ import annotations
@@ -29,6 +32,7 @@ from typing import Any, Dict, List, Optional, Tuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from pramen_spark.session import local_frame
 from pramen_spark.sources.jdbc_source import JdbcSource
 
 # inference ranks: a column's type is the highest rank seen across ALL its
@@ -146,8 +150,8 @@ def _infer_schema(
 def _coerce(rows: List[tuple], schema: T.StructType) -> List[tuple]:
     """Convert values to their column's inferred type (int -> Decimal
     under decimal promotion, int -> float under numeric promotion,
-    unfittable Decimal -> str, ...) so createDataFrame's verifier
-    accepts every row."""
+    unfittable Decimal -> str, ...) so the row verifier of
+    ``local_frame`` accepts every row."""
     casters = []
     for f in schema.fields:
         if isinstance(f.dataType, T.DoubleType):
@@ -272,7 +276,7 @@ class JdbcNativeSource(JdbcSource):
             schema = add_metadata_from_fields(
                 schema, field_metadata_from_description(description)
             )
-        df = self.spark.createDataFrame(_coerce(rows, schema), schema=schema)
+        df = local_frame(self.spark, _coerce(rows, schema), schema)
         # sanitize.datetime is structurally a no-op here: Python datetime
         # objects are bounded to years 1..9999 by construction, so only
         # save.timestamps.as.dates applies (metadata handled above since

@@ -14,11 +14,12 @@ import os
 import re
 from typing import Any, Dict, List, Optional, Tuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from pramen_spark.api import Source
 from pramen_spark.dsl.interpolate import format_date_java
+from pramen_spark.session import local_frame
 
 _TOKEN_RE = re.compile(r"\{\{([^}]+)\}\}")
 
@@ -51,21 +52,25 @@ class RawFileSource(Source):
             ]
         return [(p, os.path.basename(p)) for p in sorted(_glob.glob(rendered)) if os.path.isfile(p)]
 
-    def get_data(self, query: Any, date_from: _dt.date, date_to: _dt.date) -> DataFrame:
+    def _list_files(self, query: Any, date_from: _dt.date, date_to: _dt.date) -> List[Tuple[str, str]]:
+        """``(path, file_name)`` of every file in the range; with date tokens,
+        each path once, however many days list it."""
         pattern = query["path"] if isinstance(query, dict) else str(query)
+        if not _TOKEN_RE.search(pattern):
+            return self._list_for_date(pattern, date_from)
         files: List[Tuple[str, str]] = []
         seen = set()
-        if _TOKEN_RE.search(pattern):
-            d = date_from
-            while d <= date_to:
-                for item in self._list_for_date(pattern, d):
-                    if item[0] not in seen:
-                        seen.add(item[0])
-                        files.append(item)
-                d += _dt.timedelta(days=1)
-        else:
-            files = self._list_for_date(pattern, date_from)
-        return self.spark.createDataFrame(files, FILE_SCHEMA)
+        d = date_from
+        while d <= date_to:
+            for item in self._list_for_date(pattern, d):
+                if item[0] not in seen:
+                    seen.add(item[0])
+                    files.append(item)
+            d += _dt.timedelta(days=1)
+        return files
+
+    def get_data(self, query: Any, date_from: _dt.date, date_to: _dt.date) -> DataFrame:
+        return local_frame(self.spark, self._list_files(query, date_from, date_to), FILE_SCHEMA)
 
     def get_record_count(self, query: Any, date_from: _dt.date, date_to: _dt.date) -> int:
-        return len(self.get_data(query, date_from, date_to).collect())
+        return len(self._list_files(query, date_from, date_to))

@@ -30,8 +30,10 @@ import typing
 import uuid
 from typing import Any, Callable, Dict, Generic, List, Mapping, Optional, Type, TypeVar
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from pramen_spark.session import local_frame
 
 R = TypeVar("R")
 
@@ -281,10 +283,11 @@ class DeltaStore(RecordStore[R]):
         self.schema = spark_schema(record_type)
         self._lock = _path_lock(self.path)
 
+    def _frame(self, records: List[R]) -> DataFrame:
+        return local_frame(self.spark, [tuple(self._row(r).values()) for r in records], self.schema)
+
     def _write(self, records: List[R], mode: str) -> None:
-        rows = [tuple(self._row(r).values()) for r in records]
-        df = self.spark.createDataFrame(rows, schema=self.schema)
-        df.coalesce(1).write.format("delta").mode(mode).save(self.path)
+        self._frame(records).coalesce(1).write.format("delta").mode(mode).save(self.path)
 
     def append(self, record: R) -> None:
         with self._lock:

@@ -31,6 +31,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from pramen_spark.session import local_frame
+
 #: Session-conf key for the shuffle/state-store partition count scoped
 #: around a stream START. A stateful stream's shuffle-partition count is
 #: frozen into its checkpoint at first run, so production deployments
@@ -346,7 +348,8 @@ def neardup_foreach_batch_sink(
         try:
             idx = spark.read.parquet(index_path).select(id_col, "signature")
         except AnalysisException:  # first batch: no index yet
-            idx = spark.createDataFrame(
+            idx = local_frame(
+                spark,
                 [],
                 T.StructType(
                     [

@@ -6,6 +6,7 @@ Every write runs in a thread joined with a timeout, so a count that never
 arrives fails the test instead of hanging the suite."""
 
 import datetime as dt
+import json
 import math
 import os
 import threading
@@ -265,3 +266,66 @@ class TestIngestion:
         assert io, "the write ran no Spark job"
         assert [x for x in io if x[0] > 0 and x[1] == 0] == [], io
         assert sum(out for _, out in io) == 50
+
+
+def jobs_of(spark, fn):
+    """(result of ``fn()``, Spark jobs it started)."""
+    sc = spark.sparkContext._jsc.sc()
+    first = int(sc.dagScheduler().nextJobId())
+    value = bounded(fn)
+    return value, int(sc.dagScheduler().nextJobId()) - first
+
+
+def plain_write_jobs(spark, df, path):
+    return jobs_of(spark, lambda: df.write.mode("overwrite").parquet(path))[1]
+
+
+class TestEnceladusSink:
+    @staticmethod
+    def _sink(spark, tmp_path, **opts):
+        from pramen_spark.sinks.enceladus_sink import EnceladusSink
+
+        return EnceladusSink(spark, {"path": str(tmp_path / "lake"), "format": "parquet", **opts})
+
+    @staticmethod
+    def _info_count(tmp_path, version=1):
+        with open(str(tmp_path / "lake" / "2024" / "03" / "10" / f"v{version}" / "_INFO")) as f:
+            info = json.load(f)
+        return {int(c["controls"][0]["controlValue"]) for c in info["checkpoints"]}
+
+    @pytest.mark.parametrize("n", [13, 0])
+    def test_count_and_info_file(self, spark, tmp_path, n):
+        sink = self._sink(spark, tmp_path)
+        df = rows(spark, n).repartition(3)
+        # the write is the only job: no count() runs before it
+        assert jobs_of(spark, lambda: sink.send(df, "t", D, {})) == (
+            n, plain_write_jobs(spark, df, str(tmp_path / "plain")))
+        assert self._info_count(tmp_path) == {n}
+        assert spark.read.parquet(str(tmp_path / "lake" / "2024" / "03" / "10" / "v1")).count() == n
+
+    def test_skips_empty_output(self, spark, tmp_path):
+        sink = self._sink(spark, tmp_path, **{"save.empty": False})
+        assert bounded(lambda: sink.send(rows(spark, 0), "t", D, {})) == 0
+        assert not os.path.exists(str(tmp_path / "lake"))
+        assert bounded(lambda: sink.send(rows(spark, 4), "t", D, {})) == 4
+        assert self._info_count(tmp_path) == {4}
+
+
+class TestCmdLineSink:
+    @pytest.mark.parametrize("n", [11, 0])
+    def test_count_with_format(self, spark, tmp_path, n):
+        from pramen_spark.sinks.cmd_line_sink import CmdLineSink
+
+        sink = CmdLineSink(spark, {"cmd.line": "ls @dataPath", "format": "parquet"})
+        df = rows(spark, n).repartition(3)
+        assert jobs_of(spark, lambda: sink.send(df, "t", D, {})) == (
+            n, plain_write_jobs(spark, df, str(tmp_path / "plain")))
+        assert "_SUCCESS" in sink.last_output
+
+    @pytest.mark.parametrize("n", [6, 0])
+    def test_count_without_format(self, spark, n):
+        from pramen_spark.sinks.cmd_line_sink import CmdLineSink
+
+        sink = CmdLineSink(spark, {"cmd.line": "echo @tableName"})
+        assert bounded(lambda: sink.send(rows(spark, n), "t", D, {})) == n
+        assert sink.last_output == "t"
