@@ -3,8 +3,9 @@
 Reference: api/.../MetadataManager.scala (get/set/delete by table+date+key,
 ``MetadataValue(value, lastUpdated)``), backed by JDBC or DynamoDB in the
 reference (core/.../metadata/MetadataManagerJdbc.scala); here a
-thread-safe in-memory map with optional JSON-file persistence — the same
-durability model as the JSON bookkeeper.
+thread-safe in-memory map with optional JSON-file persistence, read and
+replaced whole through the Hadoop file system (``pramen_spark.fs``), so the
+file may sit on any Hadoop path.
 
 Scale note: metadata is control-plane only (a handful of keys per
 partition), so a single JSON document is adequate at any data scale; the
@@ -15,11 +16,14 @@ from __future__ import annotations
 
 import datetime as _dt
 import json
-import os
 import threading
 import time
 from dataclasses import dataclass, field
 from typing import Dict, Optional
+
+from pyspark.sql import SparkSession
+
+from pramen_spark.fs import HadoopFs
 
 
 @dataclass
@@ -34,13 +38,17 @@ class MetadataManager:
     """In-memory manager (``MetadataManagerNull`` persistence=False in the
     reference maps to ``is_persistent == False``)."""
 
-    def __init__(self, path: Optional[str] = None):
+    def __init__(self, path: Optional[str] = None, spark: Optional[SparkSession] = None):
         self._path = path
         self._lock = threading.Lock()
         self._data: Dict[str, Dict[str, MetadataValue]] = {}
-        if path and os.path.exists(path):
-            with open(path) as f:
-                raw = json.load(f)
+        self._fs = None
+        if path:
+            self._fs = HadoopFs(spark or SparkSession.builder.getOrCreate(), path)
+            try:
+                raw = json.loads(self._fs.read_bytes(path))
+            except FileNotFoundError:
+                raw = {}
             self._data = {
                 part: {k: MetadataValue(v["value"], v["last_updated"])
                        for k, v in entries.items()}
@@ -90,18 +98,12 @@ class MetadataManager:
     def _flush(self) -> None:
         if not self._path:
             return
-        os.makedirs(os.path.dirname(self._path) or ".", exist_ok=True)
-        tmp = self._path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    part: {k: {"value": v.value, "last_updated": v.last_updated}
-                           for k, v in entries.items()}
-                    for part, entries in self._data.items()
-                },
-                f,
-            )
-        os.replace(tmp, self._path)
+        document = {
+            part: {k: {"value": v.value, "last_updated": v.last_updated}
+                   for k, v in entries.items()}
+            for part, entries in self._data.items()
+        }
+        self._fs.write_atomic(self._path, json.dumps(document).encode())
 
     def close(self) -> None:
         pass

@@ -17,13 +17,14 @@ from __future__ import annotations
 import datetime as _dt
 from typing import Dict, List, Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pramen_spark.config.models import CachePolicy, TableConfig
 from pramen_spark.metastore.persistence import (
     MetastorePersistence,
     TransientTableManager,
+    WriteDecision,
     WriteResult,
     persistence_for,
 )
@@ -107,19 +108,36 @@ class Metastore:
 
     # --- writes ---
 
+    def stages_writes(self, name: str) -> bool:
+        """Whether writes of ``name`` are staged, so ``save_table`` can
+        observe aggregates on them and decide before they commit."""
+        cfg = self.table_config(name)
+        return not cfg.format.is_transient and self._persistence_for(name).stages_writes
+
     def save_table(
         self,
         name: str,
         df: DataFrame,
         info_date: _dt.date,
         cache_policy: CachePolicy | None = None,
+        observe: Sequence[Column] = (),
+        decide: Optional[WriteDecision] = None,
     ) -> WriteResult:
-        cfg = self.table_config(name)
-        if cfg.format.is_transient:
-            policy = cache_policy or cfg.format.cache_policy
-            self.transient.add_table(name, info_date, df, policy)
-            return WriteResult(records=-1)
-        return self._persistence_for(name).save_table(df, info_date)
+        """Write one info date of ``name``. Where the table
+        ``stages_writes``, the named ``observe`` aggregates come back in
+        ``WriteResult.metrics`` and ``decide`` runs before the commit (see
+        ``ParquetPersistence.save_table``); elsewhere ``observe`` is
+        ignored and ``decide`` is an error."""
+        if not self.stages_writes(name):
+            if decide is not None:
+                raise ValueError(f"Writes of table '{name}' are not staged: nothing to decide on")
+            cfg = self.table_config(name)
+            if cfg.format.is_transient:
+                policy = cache_policy or cfg.format.cache_policy
+                self.transient.add_table(name, info_date, df, policy)
+                return WriteResult(records=-1)
+            return self._persistence_for(name).save_table(df, info_date)
+        return self._persistence_for(name).save_table(df, info_date, observe, decide)
 
     def get_reader(
         self,

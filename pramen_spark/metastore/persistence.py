@@ -17,11 +17,18 @@ the reference (SURVEY.md §1.2, §2.2):
 Scale notes: reads of a date range are expressed as a filter on the
 partition column so Catalyst prunes partitions; single-date reads go
 straight to the partition directory (skips listing + schema merge of the
-full dataset). Writes repartition by PartitionInfo so output file count is
+full dataset) with the schema taken from a data file's footer on the
+driver. Writes repartition by PartitionInfo so output file count is
 controlled (records-per-partition sizing rather than task-count artifacts).
-Parquet writes count their rows inside the write job (``counted``), so the
-source plan runs once per save; only records-per-partition sizing counts
-before the write.
+
+Parquet and raw writes are staged: the files go to a hidden
+``<table>/.staging/<partition>-<uuid>`` directory and are swapped into the
+partition only once the write (and any check on it) has succeeded, so a
+failed write leaves the partition as it was. A parquet write observes its
+row count and any aggregates the caller asks for inside the write job
+(``observed``), so the source plan runs once per save; only
+records-per-partition sizing counts before the write. Every file-system
+call goes through ``pramen_spark.fs``, so any Hadoop path serves.
 """
 
 from __future__ import annotations
@@ -29,13 +36,13 @@ from __future__ import annotations
 import datetime as _dt
 import logging
 import math
-import os
-import shutil
+import posixpath
 import time
-from dataclasses import dataclass
-from typing import Callable, Dict, List, Optional, Tuple
+import uuid
+from dataclasses import dataclass, field
+from typing import Any, Callable, Dict, List, Optional, Sequence, Tuple
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -47,15 +54,27 @@ from pramen_spark.config.models import (
     PartitionScheme,
     TableConfig,
 )
+from pramen_spark.fs import HadoopFs
 from pramen_spark.session import local_frame
 
 
 _log = logging.getLogger(__name__)
 
 # Spark completes an Observation from a query listener on its asynchronous
-# listener bus, so the count lands a moment after the write returns. A bus
-# that drops events never completes it; past this wait the frame is counted.
+# listener bus, so the metrics land a moment after the write returns. A bus
+# that drops events never completes it; past this wait the caller computes
+# them another way.
 OBSERVED_COUNT_WAIT_S = 60.0
+
+# name of the row count among a write's metrics; rule and offset names are
+# identifiers, so none can take it
+RECORDS = "#records"
+
+STAGING_DIR = ".staging"
+
+# a write's metrics (observed aggregates by name, RECORDS included) and its
+# staged rows; raising discards the write and leaves the partition as it was
+WriteDecision = Callable[[Dict[str, Any], DataFrame], None]
 
 
 @dataclass
@@ -63,38 +82,56 @@ class WriteResult:
     records: int
     records_appended: Optional[int] = None
     size_bytes: Optional[int] = None
+    # the aggregates observed on the write, by name; empty where the target
+    # cannot observe its write
+    metrics: Dict[str, Any] = field(default_factory=dict)
 
 
-def counted(df: DataFrame) -> Tuple[DataFrame, Callable[[], int]]:
-    """``df`` with its rows counted by whichever action runs it first, and
-    a callable that returns that count.
+def observed(
+    df: DataFrame, aggregates: Sequence[Column]
+) -> Tuple[DataFrame, Callable[[], Optional[Dict[str, Any]]]]:
+    """``df`` with the named ``aggregates`` gathered by whichever action
+    runs it first, and a callable that returns them by name, or None if
+    they have not arrived ``OBSERVED_COUNT_WAIT_S`` after the action.
 
-    The count rides on the write job as an ``Observation``, so the plan
-    runs once instead of once for ``count()`` and again for the write.
-    Call ``get_count`` only after an action on the returned frame has
-    returned: before that the count does not exist, and after a failed
-    action it is partial. Take a new pair for each write attempt; an
+    The aggregates ride on that action as an ``Observation``, so the plan
+    runs once instead of once per fact. Spark rejects DISTINCT aggregates
+    here. Call the getter only after an action on the returned frame has
+    returned: before that the metrics do not exist, and after a failed
+    action they are partial. Take a new pair for each write attempt; an
     ``Observation`` serves one action. Observe the frame as written, after
-    any repartition: Spark applies a count gathered in the action's last
-    stage once per task, but one gathered in an earlier shuffle stage
+    any repartition: Spark applies metrics gathered in the action's last
+    stage once per task, but those gathered in an earlier shuffle stage
     again whenever that stage is retried."""
     observation = Observation()
-    observed = df.observe(observation, F.count(F.lit(1)).alias("records"))
+    observed_df = df.observe(observation, *aggregates)
 
-    def get_count() -> int:
+    def get_metrics() -> Optional[Dict[str, Any]]:
         future = observation._jo.future()
         deadline = time.monotonic() + OBSERVED_COUNT_WAIT_S
         while not future.isCompleted():
             if time.monotonic() > deadline:
                 _log.warning(
-                    "No observed row count %.0f s after the write; counting the frame",
-                    OBSERVED_COUNT_WAIT_S,
+                    "No observed metrics %.0f s after the write", OBSERVED_COUNT_WAIT_S
                 )
-                return df.count()
+                return None
             time.sleep(0.005)
-        return int(observation.get["records"])
+        return dict(observation.get)
 
-    return observed, get_count
+    return observed_df, get_metrics
+
+
+def counted(df: DataFrame) -> Tuple[DataFrame, Callable[[], int]]:
+    """``df`` with its rows counted by whichever action runs it first, and
+    a callable that returns that count (``observed`` with the row count
+    alone). If the count never arrives, the frame is counted."""
+    observed_df, get_metrics = observed(df, [F.count(F.lit(1)).alias(RECORDS)])
+
+    def get_count() -> int:
+        metrics = get_metrics()
+        return df.count() if metrics is None else int(metrics[RECORDS])
+
+    return observed_df, get_count
 
 
 def apply_repartitioning(df: DataFrame, info: PartitionInfo, record_count: int) -> DataFrame:
@@ -112,19 +149,18 @@ def apply_repartitioning(df: DataFrame, info: PartitionInfo, record_count: int) 
     return df
 
 
-def _dir_size(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            try:
-                total += os.path.getsize(os.path.join(root, f))
-            except OSError:
-                pass
-    return total
+def _is_data_file(name: str) -> bool:
+    # the names Spark's file index and pyarrow's dataset discovery skip
+    return not name.startswith((".", "_"))
 
 
 class MetastorePersistence:
-    """Interface: load a date range / save one info date."""
+    """Interface: load a date range / save one info date.
+
+    A backend that ``stages_writes`` takes ``observe`` and ``decide`` in
+    ``save_table`` (see ``ParquetPersistence.save_table``)."""
+
+    stages_writes = False
 
     def __init__(self, spark: SparkSession, table: TableConfig):
         self.spark = spark
@@ -161,64 +197,37 @@ class MetastorePersistence:
         return df
 
 
-class ParquetPersistence(MetastorePersistence):
-    """Directory-per-info-date parquet dataset."""
+class DirectoryPersistence(MetastorePersistence):
+    """A directory per info date under the table's path, ``{col}={date}``,
+    written through a hidden staging directory and swapped in whole."""
+
+    _fs: Optional[HadoopFs] = None
 
     @property
     def path(self) -> str:
         assert self.table.format.path, f"Table {self.table.name} has no path"
         return self.table.format.path
 
+    @property
+    def fs(self) -> HadoopFs:
+        if self._fs is None:
+            self._fs = HadoopFs(self.spark, self.path)
+        return self._fs
+
+    def partition_name(self, info_date: _dt.date) -> str:
+        return f"{self.table.info_date_column}={info_date.isoformat()}"
+
     def partition_dir(self, info_date: _dt.date) -> str:
-        return os.path.join(self.path, f"{self.table.info_date_column}={info_date.isoformat()}")
-
-    def load_table(
-        self, info_date_from: Optional[_dt.date], info_date_to: Optional[_dt.date]
-    ) -> DataFrame:
-        # Partition-direct fast path: a single-date range with an existing
-        # partition dir reads just that directory and re-adds the date
-        # column (MetastorePersistenceParquet.scala:152-176,55-65).
-        if (
-            info_date_from is not None
-            and info_date_from == info_date_to
-            and os.path.isdir(self.partition_dir(info_date_from))
-        ):
-            df = self.spark.read.parquet(self.partition_dir(info_date_from))
-            return df.withColumn(
-                self.table.info_date_column,
-                F.lit(info_date_from.isoformat()).cast(T.DateType()),
-            )
-        df = self.spark.read.option("basePath", self.path).parquet(self.path)
-        return self._range_filter(df, info_date_from, info_date_to)
-
-    def save_table(self, df: DataFrame, info_date: _dt.date) -> WriteResult:
-        # Overwrite one partition dir; the info date column is excluded
-        # from the stored files (it is encoded in the dir name).
-        out_dir = self.partition_dir(info_date)
-        save_mode = self.table.save_mode or "overwrite"
-        if self.table.info_date_column in df.columns:
-            df = df.drop(self.table.info_date_column)
-        info = self.table.format.partition_info
-        count = df.count() if info.sized_by_count else None
-        df = apply_repartitioning(df, info, count or 0)
-        df, get_count = counted(df) if count is None else (df, lambda: count)
-        writer = df.write.mode(save_mode)
-        for k, v in self.table.write_options.items():
-            writer = writer.option(k, v)
-        writer.parquet(out_dir)
-        written = get_count()
-        total = written
-        if save_mode == "append":
-            # the known schema spares the footer-reading schema inference job
-            total = self.spark.read.schema(df.schema).parquet(out_dir).count()
-        return WriteResult(records=total, records_appended=written, size_bytes=_dir_size(out_dir))
+        return posixpath.join(self.path, self.partition_name(info_date))
 
     def get_available_dates(self) -> List[_dt.date]:
         prefix = f"{self.table.info_date_column}="
+        try:
+            entries = self.fs.list(self.path)
+        except FileNotFoundError:
+            return []
         dates: List[_dt.date] = []
-        if not os.path.isdir(self.path):
-            return dates
-        for entry in os.listdir(self.path):
+        for entry in entries:
             if entry.startswith(prefix):
                 try:
                     dates.append(_dt.date.fromisoformat(entry[len(prefix) :]))
@@ -227,9 +236,147 @@ class ParquetPersistence(MetastorePersistence):
         return sorted(dates)
 
     def delete_partition(self, info_date: _dt.date) -> None:
-        d = self.partition_dir(info_date)
-        if os.path.isdir(d):
-            shutil.rmtree(d)
+        self.fs.delete(self.partition_dir(info_date), recursive=True)
+
+    def _staging_dir(self, info_date: _dt.date, replaces: bool) -> str:
+        """A new staging directory name for a write of ``info_date``. A
+        write that ``replaces`` the partition first deletes what earlier
+        writes of it left in the staging area: it owns the partition, and
+        a staging directory outlives its write only when the driver died.
+        Appends to one partition may run at once, so an append deletes
+        nothing but its own."""
+        root = posixpath.join(self.path, STAGING_DIR)
+        prefix = f"{self.partition_name(info_date)}-"
+        if replaces:
+            try:
+                leftovers = [n for n in self.fs.list(root) if n.startswith(prefix)]
+            except FileNotFoundError:
+                leftovers = []
+            for name in leftovers:
+                self.fs.delete(posixpath.join(root, name), recursive=True)
+        return posixpath.join(root, prefix + uuid.uuid4().hex)
+
+    def _commit(self, staging: str, out_dir: str, append: bool) -> None:
+        """Swap the staged directory in as the partition (``append``: move
+        its data files into the partition), then delete what it replaced.
+        Readers see the old partition or the new one: between the two
+        renames the partition is briefly absent, never half-written."""
+        fs = self.fs
+        if append:
+            fs.mkdirs(out_dir)
+            for name in fs.list(staging):
+                if _is_data_file(name):
+                    fs.rename(posixpath.join(staging, name), posixpath.join(out_dir, name))
+            fs.delete(staging, recursive=True)
+            return
+        old = staging + ".old"
+        replaces = fs.exists(out_dir)
+        if replaces:
+            fs.rename(out_dir, old)
+        try:
+            fs.rename(staging, out_dir)
+        except BaseException:
+            if replaces:
+                fs.rename(old, out_dir)
+            raise
+        if replaces:
+            fs.delete(old, recursive=True)
+
+
+class ParquetPersistence(DirectoryPersistence):
+    """Directory-per-info-date parquet dataset."""
+
+    stages_writes = True
+
+    def load_table(
+        self, info_date_from: Optional[_dt.date], info_date_to: Optional[_dt.date]
+    ) -> DataFrame:
+        # Partition-direct fast path: a single-date range with an existing
+        # partition dir reads just that directory and re-adds the date
+        # column (MetastorePersistenceParquet.scala:152-176,55-65).
+        if info_date_from is not None and info_date_from == info_date_to:
+            part = self.partition_dir(info_date_from)
+            try:
+                names = [n for n in self.fs.list(part) if _is_data_file(n)]
+            except FileNotFoundError:
+                names = None
+            if names is not None:
+                return self._read_dir(part, self._footer_schema(part, names), info_date_from)
+        df = self.spark.read.option("basePath", self.path).parquet(self.path)
+        return self._range_filter(df, info_date_from, info_date_to)
+
+    def _read_dir(self, d: str, schema: Optional[T.StructType], info_date: _dt.date) -> DataFrame:
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(d).withColumn(
+            self.table.info_date_column, F.lit(info_date.isoformat()).cast(T.DateType())
+        )
+
+    def _footer_schema(self, d: str, names: List[str]) -> Optional[T.StructType]:
+        """The schema Spark's own inference would read, without its Spark
+        job: Spark, not merging schemas, takes the Spark schema from the
+        footer of the first data file it lists. None where that file has no
+        Spark schema (not written by Spark), so that inference decides."""
+        if not names:
+            return None
+        footer = self.fs.parquet_footer(posixpath.join(d, names[0]))
+        return T.StructType.fromJson(footer.spark_schema) if footer.spark_schema else None
+
+    def save_table(
+        self,
+        df: DataFrame,
+        info_date: _dt.date,
+        observe: Sequence[Column] = (),
+        decide: Optional[WriteDecision] = None,
+    ) -> WriteResult:
+        """Write ``df`` as the partition of ``info_date`` (or append to it),
+        gathering the row count and the named ``observe`` aggregates inside
+        the write job. The files land in a staging directory; ``decide``,
+        if given, sees the metrics and the staged rows and may raise, which
+        discards the write. Only then is the partition swapped."""
+        append = self.table.save_mode == "append"
+        out_dir = self.partition_dir(info_date)
+        staging = self._staging_dir(info_date, replaces=not append)
+        info = self.table.format.partition_info
+        count = df.count() if info.sized_by_count else None
+        df = apply_repartitioning(df, info, count or 0)
+        aggregates = [F.count(F.lit(1)).alias(RECORDS), *observe]
+        df, get_metrics = observed(df, aggregates)
+        if self.table.info_date_column in df.columns:
+            # the info date is encoded in the directory name, not stored
+            df = df.drop(self.table.info_date_column)
+        writer = df.write
+        for k, v in self.table.write_options.items():
+            writer = writer.option(k, v)
+        try:
+            writer.parquet(staging)
+            metrics = get_metrics()
+            if metrics is None or decide is not None:
+                staged = self._read_dir(staging, df.schema, info_date)
+            if metrics is None:
+                # the staged files, not the upstream plan, give the facts
+                metrics = staged.agg(*aggregates).first().asDict()
+            if decide is not None:
+                decide(metrics, staged)
+            self._commit(staging, out_dir, append)
+        except BaseException:
+            self.fs.delete(staging, recursive=True)
+            raise
+        written = int(metrics[RECORDS])
+        total = self._footer_rows(out_dir) if append else written
+        return WriteResult(
+            records=total,
+            records_appended=written,
+            size_bytes=self.fs.content_size(out_dir),
+            metrics=metrics,
+        )
+
+    def _footer_rows(self, d: str) -> int:
+        """Rows in the data files of ``d``, from their footers."""
+        return sum(
+            self.fs.parquet_footer(posixpath.join(d, n)).rows
+            for n in self.fs.list(d)
+            if _is_data_file(n)
+        )
 
 
 class DeltaPersistence(MetastorePersistence):
@@ -365,26 +512,16 @@ class IcebergPersistence(MetastorePersistence):
         return sorted(r[0] for r in rows if r[0] is not None)
 
 
-class RawPersistence(MetastorePersistence):
+class RawPersistence(DirectoryPersistence):
     """Files copied verbatim into per-date dirs; reads return a DataFrame of
     ``[path, file_name]`` (MetastorePersistenceRaw.scala:57-134)."""
 
-    @property
-    def path(self) -> str:
-        assert self.table.format.path, f"Table {self.table.name} has no path"
-        return self.table.format.path
-
-    def partition_dir(self, info_date: _dt.date) -> str:
-        return os.path.join(self.path, f"{self.table.info_date_column}={info_date.isoformat()}")
-
     def _list_files(self, d: str) -> List[Tuple[str, str]]:
-        if not os.path.isdir(d):
+        try:
+            names = sorted(self.fs.list_files(d))
+        except FileNotFoundError:
             return []
-        return [
-            (os.path.join(d, f), f)
-            for f in sorted(os.listdir(d))
-            if os.path.isfile(os.path.join(d, f))
-        ]
+        return [(posixpath.join(d, n), n) for n in names]
 
     def load_table(
         self, info_date_from: Optional[_dt.date], info_date_to: Optional[_dt.date]
@@ -405,30 +542,20 @@ class RawPersistence(MetastorePersistence):
         return local_frame(self.spark, files, schema)
 
     def save_table(self, df: DataFrame, info_date: _dt.date) -> WriteResult:
-        # df is a list of source file paths (column ``path``)
+        # df is a list of source file paths (column ``path``); the copies are
+        # staged and swapped in like a parquet write
         out_dir = self.partition_dir(info_date)
-        if os.path.isdir(out_dir):
-            shutil.rmtree(out_dir)
-        os.makedirs(out_dir, exist_ok=True)
+        staging = self._staging_dir(info_date, replaces=True)
         paths = [r["path"] for r in df.select("path").collect()]
-        total = 0
-        for p in paths:
-            shutil.copy2(p, os.path.join(out_dir, os.path.basename(p)))
-            total += 1
-        return WriteResult(records=total, size_bytes=_dir_size(out_dir))
-
-    def get_available_dates(self) -> List[_dt.date]:
-        prefix = f"{self.table.info_date_column}="
-        dates: List[_dt.date] = []
-        if not os.path.isdir(self.path):
-            return dates
-        for entry in os.listdir(self.path):
-            if entry.startswith(prefix):
-                try:
-                    dates.append(_dt.date.fromisoformat(entry[len(prefix) :]))
-                except ValueError:
-                    pass
-        return sorted(dates)
+        try:
+            self.fs.mkdirs(staging)
+            for p in paths:
+                self.fs.copy_from(p, posixpath.join(staging, posixpath.basename(p)))
+            self._commit(staging, out_dir, append=False)
+        except BaseException:
+            self.fs.delete(staging, recursive=True)
+            raise
+        return WriteResult(records=len(paths), size_bytes=self.fs.content_size(out_dir))
 
 
 class TransientTableManager:
@@ -455,9 +582,10 @@ class TransientTableManager:
             df = df.cache()
         elif policy == CachePolicy.PERSIST:
             assert self.temp_dir, "PERSIST cache policy needs a temp dir"
-            path = os.path.join(self.temp_dir, f"transient_{name}_{info_date.isoformat()}")
+            path = posixpath.join(self.temp_dir, f"transient_{name}_{info_date.isoformat()}")
             df.write.mode("overwrite").parquet(path)
-            df = self.spark.read.parquet(path)
+            # the known schema spares the footer-reading schema inference job
+            df = self.spark.read.schema(df.schema).parquet(path)
         self._tables[self._key(name, info_date)] = df
 
     def has_table(self, name: str, info_date: _dt.date) -> bool:

@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pramen_spark.session import local_frame
+
 
 @contextmanager
 def _iteration_conf(spark, enabled: bool = True):
@@ -104,6 +106,20 @@ def _edge_indices(e: DataFrame):
     ai, bi = inv[: len(a)], inv[len(a):]
     order = np.lexsort((ai, bi))
     return vs, ai[order], bi[order]
+
+
+def _driver_frame(spark, vertex_type: T.DataType, vs, scores: dict) -> DataFrame:
+    """(vertex, *scores) from the driver path's numpy arrays, built through
+    ``local_frame``: vertices in ``vertex_type``, each score a double."""
+    import pandas as pd
+
+    schema = T.StructType(
+        [T.StructField("vertex", vertex_type)]
+        + [T.StructField(name, T.DoubleType()) for name in scores]
+    )
+    # pandas turns numpy scalars (datetime64 included) into Python values
+    columns = [pd.Series(vs).tolist()] + [v.tolist() for v in scores.values()]
+    return local_frame(spark, list(zip(*columns)), schema)
 
 
 def connected_components(
@@ -195,10 +211,7 @@ def connected_components(
                 T.StructField("component", vertex_type, False),
             ]
         )
-        spark = edges.sparkSession
-        return spark.createDataFrame(
-            [(v, find(v)) for v in parent], out_schema
-        )
+        return local_frame(edges.sparkSession, [(v, find(v)) for v in parent], out_schema)
     # undirected: propagate along both directions of every edge
     und = e.union(e.select(F.col("eb").alias("ea"), F.col("ea").alias("eb")))
     # partitioned once on the join key and persisted: every round's join
@@ -347,11 +360,9 @@ def pagerank(
             contrib = np.bincount(bi, weights=r[ai] / deg[ai], minlength=n)
             m = float(r[dangling].sum())
             r = base + damping * (contrib + m / n)
-        import pandas as pd
-
-        # cast back to the src/dst coercion the distributed path's
-        # unionByName produces, so both paths return one schema no matter
-        # what dtype pandas/Arrow inferred for the collected ids
+        # the vertex column takes the src/dst coercion the distributed
+        # path's unionByName produces, so both paths return one schema no
+        # matter what dtype pandas inferred for the collected ids
         # (ADVICE r14)
         vertex_type = (
             e.select(F.col("a").alias("v"))
@@ -359,9 +370,9 @@ def pagerank(
             .schema["v"]
             .dataType
         )
-        return edges.sparkSession.createDataFrame(
-            pd.DataFrame({"vertex": vs, "rank": r})
-        ).select(F.col("vertex").cast(vertex_type).alias("vertex"), "rank")
+        return _driver_frame(
+            edges.sparkSession, vertex_type, vs, {"rank": r}
+        )
     verts = (
         e.select(F.col("a").alias("v"))
         .unionByName(e.select(F.col("b").alias("v")))
@@ -516,21 +527,15 @@ def hits(
             a_s = a_raw / a_raw.max()
             h_raw = np.bincount(ai_o, weights=a_s[bi_o], minlength=n)
             h = h_raw / h_raw.max()
-        import pandas as pd
-
-        # same schema-pinning cast as pagerank's driver path (ADVICE r14)
+        # same schema pinning as pagerank's driver path (ADVICE r14)
         vertex_type = (
             e.select(F.col("a").alias("v"))
             .unionByName(e.select(F.col("b").alias("v")))
             .schema["v"]
             .dataType
         )
-        return edges.sparkSession.createDataFrame(
-            pd.DataFrame({"vertex": vs, "hub": h, "authority": a_s})
-        ).select(
-            F.col("vertex").cast(vertex_type).alias("vertex"),
-            "hub",
-            "authority",
+        return _driver_frame(
+            edges.sparkSession, vertex_type, vs, {"hub": h, "authority": a_s}
         )
     verts = (
         e.select(F.col("a").alias("v"))

@@ -105,6 +105,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pramen_spark.session import local_frame
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -2515,7 +2517,7 @@ def make_fake_media_df(spark, n: int = 16, media_type: str = "image") -> DataFra
         )
         for i in range(n)
     ]
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

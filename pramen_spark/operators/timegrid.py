@@ -14,6 +14,18 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from pramen_spark.session import local_frame
+
+_THEIL_SEN_SCHEMA = T.StructType(
+    [
+        T.StructField("n_points", T.LongType()),
+        T.StructField("n_pairs", T.LongType()),
+        T.StructField("slope", T.DoubleType()),
+        T.StructField("intercept", T.DoubleType()),
+    ]
+)
 
 
 def bucket_gapfill(
@@ -375,9 +387,8 @@ def theil_sen(
             if m is not None:
                 resid = np.sort(ys[~y_null] - m * xs[~y_null])
                 intercept = _qcont_py(resid, 0.5)
-                out = spark.createDataFrame(
-                    [(int(len(rows)), n_pairs, float(m), intercept)],
-                    "n_points long, n_pairs long, slope double, intercept double",
+                out = local_frame(
+                    spark, [(int(len(rows)), n_pairs, float(m), intercept)], _THEIL_SEN_SCHEMA
                 )
                 return out.select(
                     "n_points",
@@ -392,7 +403,7 @@ def theil_sen(
         # input from those rows instead of re-running the upstream plan
         # (ADVICE r14). Over-cap collects (cap+1 rows) are partial and
         # keep the original plan.
-        base = spark.createDataFrame(rows, base.schema)
+        base = local_frame(spark, rows, base.schema)
     # The pair join is a broadcast-nested-loop whose parallelism equals the
     # STREAMED side's partition count — and the pre-aggregated grid arrives
     # as one tiny (AQE-coalesced) partition, which would serialize the

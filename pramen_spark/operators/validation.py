@@ -14,7 +14,7 @@ from __future__ import annotations
 import re
 from typing import Any, Dict, List, Sequence, Tuple
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 # rule names are interpolated into the stack(...) pivot expression; a
@@ -23,23 +23,19 @@ from pyspark.sql import functions as F
 _RULE_NAME = re.compile(r"^[A-Za-z0-9_]+$")
 
 
-def validate_expectations(
-    df: DataFrame, rules: Sequence[Tuple[str, str, Dict[str, Any]]]
-) -> DataFrame:
-    """``rules`` is a list of (rule_name, kind, params):
+# kinds whose aggregate counts distinct values, which Spark does not allow
+# in observed metrics (``observed`` in metastore/persistence.py)
+DISTINCT_KINDS = frozenset({"unique"})
 
-    - ``("id_not_null", "not_null", {"col": "id"})`` — no NULLs
-    - ``("id_unique", "unique", {"col": "id"})`` — no duplicate values
-      (violations = rows - distinct values, NULLs count as one value)
-    - ``("len_range", "in_range", {"col": "n", "lo": 0, "hi": 100})`` —
-      values inside [lo, hi]; NULLs violate
-    - ``("lang_shape", "matches", {"col": "lang", "pattern": r"^[a-z]{2}$"})``
-      — full-string regex match; NULLs violate
-    - ``("custom", "predicate", {"sql": "a < b"})`` — rows violating the
-      SQL predicate
 
-    Returns (rule, violations, passed), one row per rule, in rule order.
-    """
+def expectation_aggregates(
+    rules: Sequence[Tuple[str, str, Dict[str, Any]]]
+) -> List[Column]:
+    """One aggregate per rule, aliased by the rule's name, counting the
+    rows that violate it (NULL over no rows); the rules are as in
+    ``validate_expectations``. Rules of the ``DISTINCT_KINDS`` count
+    distinct values; every other aggregate can ride on a write as an
+    observed metric."""
     aggs = []
     for name, kind, p in rules:
         if not _RULE_NAME.match(name):
@@ -71,7 +67,27 @@ def validate_expectations(
             aggs.append(F.sum((~ok).cast("long")).alias(name))
         else:
             raise ValueError(f"unknown expectation kind: {kind!r}")
-    wide = df.agg(*aggs)
+    return aggs
+
+
+def validate_expectations(
+    df: DataFrame, rules: Sequence[Tuple[str, str, Dict[str, Any]]]
+) -> DataFrame:
+    """``rules`` is a list of (rule_name, kind, params):
+
+    - ``("id_not_null", "not_null", {"col": "id"})`` — no NULLs
+    - ``("id_unique", "unique", {"col": "id"})`` — no duplicate values
+      (violations = rows - distinct values, NULLs count as one value)
+    - ``("len_range", "in_range", {"col": "n", "lo": 0, "hi": 100})`` —
+      values inside [lo, hi]; NULLs violate
+    - ``("lang_shape", "matches", {"col": "lang", "pattern": r"^[a-z]{2}$"})``
+      — full-string regex match; NULLs violate
+    - ``("custom", "predicate", {"sql": "a < b"})`` — rows violating the
+      SQL predicate
+
+    Returns (rule, violations, passed), one row per rule, in rule order.
+    """
+    wide = df.agg(*expectation_aggregates(rules))
     pairs = ", ".join(f"'{name}', `{name}`" for name, _, _ in rules)
     stacked = wide.select(
         F.expr(f"stack({len(rules)}, {pairs}) AS (rule, violations)")

@@ -14,7 +14,8 @@ Protocol per task:
    - info date + normal: offset > max for that date (or whole day if first)
    - info date + rerun: the whole day
 3. save: start a ledger transaction, append the batch (stamped with the
-   batch id), compute the written slice's min/max offsets, commit.
+   batch id) while observing the written slice's min/max offsets in the
+   same write job, commit.
 """
 
 from __future__ import annotations
@@ -34,20 +35,32 @@ from pramen_spark.runner.jobs import Job
 from pramen_spark.sql.generators import OffsetType, OffsetValue
 
 
-def min_max_from_df(df: DataFrame, offset_column: str, offset_type: OffsetType):
-    """Compute (min, max) OffsetValue of a slice (OffsetManagerUtils)."""
-    row = df.agg(
-        F.min(offset_column).alias("mn"), F.max(offset_column).alias("mx")
-    ).collect()[0]
-    if row["mn"] is None:
+# names of the slice's offset range among a write's metrics
+OFFSET_MIN, OFFSET_MAX = "#offset_min", "#offset_max"
+
+
+def offset_range(mn, mx, offset_type: OffsetType):
+    """(min, max) OffsetValue of a slice whose raw min/max are ``mn`` and
+    ``mx``; None for an empty slice (OffsetManagerUtils)."""
+    if mn is None:
         return None
+
     def wrap(v):
         if offset_type == OffsetType.DATETIME:
             return OffsetValue.datetime(v)
         if offset_type == OffsetType.INTEGRAL:
             return OffsetValue.integral(int(v))
         return OffsetValue.string(str(v))
-    return wrap(row["mn"]), wrap(row["mx"])
+
+    return wrap(mn), wrap(mx)
+
+
+def min_max_from_df(df: DataFrame, offset_column: str, offset_type: OffsetType):
+    """Compute (min, max) OffsetValue of a slice (OffsetManagerUtils)."""
+    row = df.agg(
+        F.min(offset_column).alias("mn"), F.max(offset_column).alias("mx")
+    ).collect()[0]
+    return offset_range(row["mn"], row["mx"], offset_type)
 
 
 class IncrementalIngestionJob(Job):
@@ -150,13 +163,22 @@ class IncrementalIngestionJob(Job):
                 )
             return self.source.get_data(self.source_query, info_date, info_date)
 
-    def save(self, df: DataFrame, info_date: _dt.date):
+    def save(self, df: DataFrame, info_date: _dt.date, observe=(), decide=None):
         batch_id = getattr(self, "current_batch_id", 0)
         tx = self.ledger.start_write(
             self.output_table.name, info_date, batch_id, self.offset_type
         )
+        # The slice's offset range rides on the write job, so it describes
+        # exactly the rows stored: a second action over the plan could see
+        # other rows from a non-deterministic source (JDBC / Kafka rows
+        # arriving in between) and commit offsets that do not match them ->
+        # duplicates or gaps on the next incremental read.
+        offsets = [
+            F.min(self.offset_column).alias(OFFSET_MIN),
+            F.max(self.offset_column).alias(OFFSET_MAX),
+        ]
         try:
-            result = self.metastore.save_table(self.output_table.name, df, info_date)
+            result = super().save(df, info_date, [*observe, *offsets], decide)
         except Exception:
             # the write itself failed -> nothing stored, safe to roll back
             self.ledger.rollback(tx)
@@ -169,14 +191,18 @@ class IncrementalIngestionJob(Job):
         if not written:
             self.ledger.rollback(tx)  # empty batch: nothing to commit
             return result
-        # If the read-back below raises, rows WERE written but could not be
-        # verified. Do NOT roll back: a rolled-back tx looks committed-less
-        # forever, so the next incremental read would start from the OLD max
-        # offset and re-append the same source rows (duplicates). Leaving
-        # the tx uncommitted and failing the task means the next run's
-        # repair_uncommitted adopts the stored rows (commits their actual
-        # min/max) before reading — exactly the crash-mid-write path.
-        mm = self._min_max_from_storage(info_date, batch_id)
+        # If anything below raises, rows WERE written but their offsets
+        # were not committed. Do NOT roll back: a rolled-back tx looks
+        # committed-less forever, so the next incremental read would start
+        # from the OLD max offset and re-append the same source rows
+        # (duplicates). Leaving the tx uncommitted and failing the task
+        # means the next run's repair_uncommitted adopts the stored rows
+        # (commits their actual min/max) before reading — exactly the
+        # crash-mid-write path.
+        if OFFSET_MIN in result.metrics:
+            mm = offset_range(result.metrics[OFFSET_MIN], result.metrics[OFFSET_MAX], self.offset_type)
+        else:
+            mm = self._min_max_from_storage(info_date, batch_id)
         if mm is None:
             self.ledger.rollback(tx)
         else:
@@ -184,15 +210,10 @@ class IncrementalIngestionJob(Job):
         return result
 
     def _min_max_from_storage(self, info_date: _dt.date, batch_id: int):
-        """Min/max offsets of the rows actually WRITTEN, read back from the
-        metastore table filtered to the current batch id.
-
-        Committing from the pre-write DataFrame would run a separate action on
-        a plan the write then re-evaluates; a non-deterministic source (JDBC /
-        Kafka rows arriving between the two actions) could commit offsets that
-        do not match stored rows -> duplicates or gaps on the next incremental
-        read.  The reference likewise derives offsets from the data
-        (core/.../bookkeeper/OffsetManagerUtils.scala:27-57,
+        """Min/max offsets of the rows of ``batch_id``, read back from the
+        metastore table, for targets that cannot observe their write
+        (transient, Delta, Iceberg). The reference likewise derives offsets
+        from the data (core/.../bookkeeper/OffsetManagerUtils.scala:27-57,
         IncrementalIngestionJob.scala:242-297).
 
         Raises on read failure — the caller decides (a failed read-back

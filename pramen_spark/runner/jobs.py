@@ -80,8 +80,16 @@ class Job:
     def run(self, info_date: _dt.date) -> DataFrame:
         raise NotImplementedError
 
-    def save(self, df: DataFrame, info_date: _dt.date):
-        return self.metastore.save_table(self.output_table.name, df, info_date)
+    @property
+    def stages_output(self) -> bool:
+        """Whether ``save`` stages its write, so it takes ``observe`` and
+        ``decide`` (``Metastore.save_table``)."""
+        return self.metastore.stages_writes(self.output_table.name)
+
+    def save(self, df: DataFrame, info_date: _dt.date, observe=(), decide=None):
+        return self.metastore.save_table(
+            self.output_table.name, df, info_date, observe=observe, decide=decide
+        )
 
 
 class SourceCacheMixin:
@@ -235,8 +243,8 @@ class TransformationJob(Job):
     def run(self, info_date: _dt.date) -> DataFrame:
         return self.transformer.run(self._reader(info_date), info_date, self.operation.options)
 
-    def save(self, df: DataFrame, info_date: _dt.date):
-        result = super().save(df, info_date)
+    def save(self, df: DataFrame, info_date: _dt.date, observe=(), decide=None):
+        result = super().save(df, info_date, observe, decide)
         self.transformer.post_process(self._reader(info_date), info_date, self.operation.options)
         return result
 
@@ -245,6 +253,8 @@ class SinkJob(Job):
     """Metastore table -> sink (SinkJob.scala:63-180). The row-level
     decorations (transformations/filters/projection) are applied by the
     task runner before ``save``/``send``."""
+
+    stages_output = False
 
     def __init__(
         self,
@@ -300,6 +310,8 @@ class TransferJob(SourceCacheMixin, Job):
     name used only for bookkeeping/locking. disable.count.query behaves
     as in ingestion (the reference builds TransferJob ON an IngestionJob
     and passes the flag through — TransferJob.scala:46-57)."""
+
+    stages_output = False
 
     def __init__(
         self,

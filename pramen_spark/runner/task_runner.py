@@ -19,10 +19,11 @@ import time
 import traceback
 from dataclasses import dataclass, field
 from enum import Enum
-from typing import List, Optional
+from typing import Any, Dict, List, Optional
 
 from pramen_spark.config.models import FieldChange
 from pramen_spark.operators.rowlevel import apply_decorations, compare_schemas
+from pramen_spark.operators.validation import DISTINCT_KINDS, expectation_aggregates
 from pramen_spark.runner.bookkeeper import Bookkeeper, Journal, JournalEntry, TokenLock
 from pramen_spark.runner.jobs import Job, JobPreRunStatus
 from pramen_spark.scheduling.strategies import TaskPreDef, TaskRunReason
@@ -311,42 +312,19 @@ class TaskRunner:
                 sanitize_columns=True,
             )
 
-            # 3b. data-quality expectations gate (beyond the reference —
-            # validates the DECORATED output before anything is written,
-            # so a failing table never reaches the metastore).  The
-            # decorated plan is persisted across gate + save so the
-            # upstream input is computed ONCE per publish, not twice —
-            # at 100 TB the second pass would double every gated write.
-            persisted = False
-            if op.expectations:
+            # 3b. data-quality expectations gate (beyond the reference: a
+            # failing table never reaches the metastore). Where the output
+            # is staged, the rule aggregates ride on the write job and the
+            # gate decides before the commit; elsewhere the decorated plan
+            # is persisted across gate + save, so the upstream input is
+            # computed once per publish either way.
+            gate = _ExpectationGate(op.expectations, op.expectations_action) if op.expectations else None
+            staged = gate is not None and job.stages_output
+            if gate is not None and not staged:
                 from pyspark.storagelevel import StorageLevel
 
-                from pramen_spark.operators.validation import validate_expectations
-
-                df = df.persist(StorageLevel.MEMORY_AND_DISK)
-                persisted = True
-                persisted_df = df
-                rules = [
-                    (
-                        str(e.get("name", f"rule_{i}")),
-                        str(e.get("kind", "predicate")),
-                        {k: v for k, v in e.items() if k not in ("name", "kind")},
-                    )
-                    for i, e in enumerate(op.expectations)
-                ]
-                report = validate_expectations(df, rules).collect()
-                failed_rules = [
-                    f"{r.rule} ({r.violations} violations)"
-                    for r in report
-                    if not r.passed
-                ]
-                if failed_rules:
-                    msg = "Expectations failed: " + "; ".join(failed_rules)
-                    if op.expectations_action == "warn":
-                        warnings = list(warnings) + [msg]
-                    else:
-                        df.unpersist()
-                        return result(RunStatus.FAILED, error=msg)
+                df = persisted_df = df.persist(StorageLevel.MEMORY_AND_DISK)
+                gate.check(df)
 
             # 4. schema drift tracking (TaskRunnerBase.scala:601-625)
             schema_changes: List[FieldChange] = []
@@ -357,19 +335,17 @@ class TaskRunner:
 
                 old_schema = T.StructType.fromJson(old_schema_json)
                 schema_changes = compare_schemas(old_schema, new_schema)
-                if schema_changes and not self.undercover:
-                    self.bookkeeper.save_schema(table, info_date, json.dumps(new_schema.jsonValue()))
-            elif not self.undercover:
-                self.bookkeeper.save_schema(table, info_date, json.dumps(new_schema.jsonValue()))
+            save_schema = old_schema_json is None or bool(schema_changes)
 
             # 5. save (the Spark action happens here)
-            try:
+            if staged:
+                write_result = job.save(df, info_date, observe=gate.observed, decide=gate.decide)
+            else:
                 write_result = job.save(df, info_date)
-            finally:
-                if persisted:
-                    df.unpersist()
 
             if not self.undercover:
+                if save_schema:
+                    self.bookkeeper.save_schema(table, info_date, json.dumps(new_schema.jsonValue()))
                 self.bookkeeper.set_record_count(
                     table,
                     info_date,
@@ -382,13 +358,69 @@ class TaskRunner:
             return result(
                 RunStatus.SUCCEEDED,
                 records=write_result.records,
-                warnings=warnings,
+                warnings=warnings + (gate.warnings if gate is not None else []),
                 schema_changes=schema_changes,
             )
+        except ExpectationsFailed as e:
+            return result(RunStatus.FAILED, error=str(e))
         except Exception:
+            return result(RunStatus.FAILED, error=traceback.format_exc(limit=20))
+        finally:
             if persisted_df is not None:
                 try:
                     persisted_df.unpersist()
                 except Exception:
                     pass
-            return result(RunStatus.FAILED, error=traceback.format_exc(limit=20))
+
+
+class ExpectationsFailed(Exception):
+    """A ``fail``-action expectations gate rejected the task's output."""
+
+
+class _ExpectationGate:
+    """One task's data-quality expectations (``validate_expectations``
+    rules) and what a failure does: ``fail`` raises ``ExpectationsFailed``,
+    ``warn`` adds the message to ``warnings``."""
+
+    def __init__(self, expectations: List[dict], action: str):
+        self.rules = [
+            (
+                str(e.get("name", f"rule_{i}")),
+                str(e.get("kind", "predicate")),
+                {k: v for k, v in e.items() if k not in ("name", "kind")},
+            )
+            for i, e in enumerate(expectations)
+        ]
+        self.fail = action != "warn"
+        self.warnings: List[str] = []
+        self._distinct = [r for r in self.rules if r[1] in DISTINCT_KINDS]
+        aggregates = expectation_aggregates(self.rules)
+        self.observed = [a for r, a in zip(self.rules, aggregates) if r[1] not in DISTINCT_KINDS]
+
+    def check(self, df) -> None:
+        """Gate ``df`` before it is written: every rule in one job."""
+        self._judge(self._report(df, self.rules))
+
+    def decide(self, metrics: Dict[str, Any], staged) -> None:
+        """Gate a staged write: ``observed`` rules from the write's
+        metrics, the rules that count distinct values (which cannot be
+        observed) in one job over the ``staged`` files."""
+        violations = {name: metrics[name] for name, kind, _ in self.rules if kind not in DISTINCT_KINDS}
+        if self._distinct:
+            violations.update(self._report(staged, self._distinct))
+        self._judge(violations)
+
+    @staticmethod
+    def _report(df, rules) -> Dict[str, int]:
+        from pramen_spark.operators import validation
+
+        return {r.rule: r.violations for r in validation.validate_expectations(df, rules).collect()}
+
+    def _judge(self, violations: Dict[str, Optional[int]]) -> None:
+        failed = [f"{name} ({violations[name]} violations)" for name, _, _ in self.rules if violations[name]]
+        if not failed:
+            return
+        msg = "Expectations failed: " + "; ".join(failed)
+        if self.fail:
+            raise ExpectationsFailed(msg)
+        self.warnings.append(msg)

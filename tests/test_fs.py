@@ -94,3 +94,51 @@ def test_list_round_trips_unusual_names(spark, root, tmp_path):
     (d / "c,d").unlink()
     (d / "e,").unlink()
     assert set(fs.list(where)) == names - {"c,d", "e,"}
+
+
+def test_directories_rename_copy_and_size(spark, root, tmp_path):
+    fs = HadoopFs(spark, root)
+    fs.mkdirs(f"{root}/a/b")
+    fs.write_atomic(f"{root}/a/b/f1", b"12345")
+    fs.write_atomic(f"{root}/a/f2", b"67")
+    assert fs.content_size(f"{root}/a") == 7
+    assert fs.content_size(f"{root}/a/f2") == 2
+    assert fs.list_files(f"{root}/a") == ["f2"]  # not the directory b
+
+    fs.rename(f"{root}/a", f"{root}/c")
+    assert not fs.exists(f"{root}/a")
+    assert fs.read_bytes(f"{root}/c/b/f1") == b"12345"
+    fs.mkdirs(f"{root}/d")
+    with pytest.raises(FileExistsError):
+        fs.rename(f"{root}/c", f"{root}/d")  # never moved into, never replaced
+    with pytest.raises(OSError):
+        fs.rename(f"{root}/nope", f"{root}/e")
+
+    (tmp_path / "plain.txt").write_bytes(b"copied")
+    fs.copy_from(str(tmp_path / "plain.txt"), f"{root}/d/plain.txt")
+    assert fs.read_bytes(f"{root}/d/plain.txt") == b"copied"
+
+    assert fs.delete(f"{root}/c", recursive=True) is True
+    assert not fs.exists(f"{root}/c/b/f1")
+    with pytest.raises(FileNotFoundError):
+        fs.content_size(f"{root}/c")
+
+
+def test_write_atomic_replaces(spark, root):
+    fs = HadoopFs(spark, root)
+    fs.write_atomic(f"{root}/doc.json", b"first")
+    fs.write_atomic(f"{root}/doc.json", b"second")
+    assert fs.read_bytes(f"{root}/doc.json") == b"second"
+    assert [n for n in fs.list(root) if not n.startswith(".")] == ["doc.json"]
+
+
+def test_parquet_footer(spark, root):
+    df = spark.range(7).selectExpr("id", "cast(id as decimal(9,2)) AS d")
+    df.coalesce(1).write.parquet(f"{root}/p")
+    fs = HadoopFs(spark, root)
+    (name,) = [n for n in fs.list(f"{root}/p") if n.endswith(".parquet")]
+    footer = fs.parquet_footer(f"{root}/p/{name}")
+    assert footer.rows == 7
+    assert footer.spark_schema == df.schema.jsonValue()
+    with pytest.raises(FileNotFoundError):
+        fs.parquet_footer(f"{root}/p/missing.parquet")

@@ -117,17 +117,17 @@ class TestIncrementalIngestion:
         assert ledger.get_uncommitted("events_inc") == []
         assert ledger.get_max_info_date_and_offset("events_inc") is None
 
-    def test_readback_failure_leaves_tx_uncommitted(self, env, monkeypatch):
-        """Rows written but post-write offset read-back fails: the tx must
-        stay UNCOMMITTED (not rolled back) so the next run adopts the
-        stored rows via repair_uncommitted instead of re-reading the same
-        source rows into duplicates."""
+    def test_commit_failure_leaves_tx_uncommitted(self, env, monkeypatch):
+        """Rows written but the offset commit fails: the tx must stay
+        UNCOMMITTED (not rolled back) so the next run adopts the stored
+        rows via repair_uncommitted instead of re-reading the same source
+        rows into duplicates."""
         spark, ms, bk, ledger, job, _ = env
 
-        def boom(info_date, batch_id):
-            raise IOError("transient storage error during read-back")
+        def boom(tx, mn, mx):
+            raise IOError("transient storage error during the commit")
 
-        monkeypatch.setattr(job, "_min_max_from_storage", boom)
+        monkeypatch.setattr(ledger, "commit", boom)
         r = TaskRunner(bk, batch_id=1).run_task(job, TaskPreDef(D, TaskRunReason.NEW))
         assert r.status == RunStatus.FAILED
         assert ms.get_table("events_inc", D, D).count() == 100  # rows landed

@@ -319,12 +319,12 @@ def test_delta_store_frame(spark, tmp_path):
     assert [store._record(r.asDict()) for r in df.collect()] == entries
 
 
-# --- guard: the pipeline's packages build frames from rows only through
-# local_frame ---
+# --- guard: the pipeline's packages and the query catalog's operators
+# build frames from rows only through local_frame ---
 
 GUARDED = [
     os.path.join(ROOT, "pramen_spark", d)
-    for d in ("sources", "sinks", "metastore", "runner", "streaming")
+    for d in ("sources", "sinks", "metastore", "runner", "streaming", "operators", "queries")
 ] + [os.path.join(ROOT, "pramen_spark", "store.py")]
 
 

@@ -132,6 +132,39 @@ class TestPipelineEndToEnd:
         assert bk.get_latest_processed_date("orders_bronze") == RUN_DATE
         assert bk.get_latest_processed_date("revenue_gold") == RUN_DATE
 
+    def test_full_pipeline_on_file_uris(self, spark, tmp_path, sf_dir):
+        """Metastore, bookkeeping and journal at ``file:///`` URIs, the form
+        ``hdfs://`` and ``s3a://`` locations take: every file-system call
+        goes through Hadoop, so dates are found, not silently missed."""
+        from pramen_spark.runner.spark_bookkeeper import SparkBookkeeper, SparkJournal
+
+        root = tmp_path.as_uri()
+        ms = Metastore(
+            spark,
+            [
+                TableConfig(name=n, format=DataFormat.parquet(f"{root}/{d}"), info_date_start=D(2024, 3, 1))
+                for n, d in (("orders_bronze", "orders"), ("customer_bronze", "customer"),
+                             ("revenue_gold", "revenue"))
+            ] + [TableConfig(name="csv_out", format=DataFormat.null(), info_date_start=D(2024, 3, 1))],
+            temp_dir=f"{root}/tmp",
+        )
+        bk = SparkBookkeeper(spark, f"{root}/bookkeeping")
+        journal = SparkJournal(spark, f"{root}/journal")
+        jobs = make_jobs(spark, ms, bk, sf_dir, tmp_path)
+        result = PipelineRunner(ms, bk, journal=journal, parallel_tasks=4).run(
+            jobs, ScheduleParams.normal(RUN_DATE))
+        assert result.failed == 0, [(r.table_name, r.status, r.error) for r in result.results]
+
+        for table in ("orders_bronze", "customer_bronze", "revenue_gold"):
+            assert ms.get_latest_available_date(table) == RUN_DATE
+            assert ms.is_data_available(table, RUN_DATE, RUN_DATE)
+        gold = ms.get_table("revenue_gold", RUN_DATE, RUN_DATE)
+        assert sum(r["n_orders"] for r in gold.collect()) == 1500
+        # a fresh bookkeeper on the same location sees the run
+        assert SparkBookkeeper(spark, f"{root}/bookkeeping").get_latest_processed_date(
+            "revenue_gold") == RUN_DATE
+        assert {e.table_name for e in journal.get_entries(0, 2e9)} >= {"orders_bronze", "revenue_gold"}
+
     def test_notification_targets_and_hooks(self, spark, pipeline_env, sf_dir, tmp_path):
         import json as _json
         import sys
